@@ -194,6 +194,33 @@ def _argmin_udf(cents: list[list[int]], lo: int = 0, d: int | None = None):
     return _am
 
 
+def _fold_partials(parts, op: str) -> dict:
+    """Sum per-partition ``(name, cluster, cnt, sums)`` partials into
+    ``(name, cluster) -> (cnt, sums)``; ``sums`` stays None for a
+    cluster no partition assigned a vector to.  Partitions that report
+    different vector widths for the same chain raise the operators'
+    dimension error instead of truncating to the shorter width."""
+    tot: dict = {}
+    for r in parts:
+        key = (r["name"], r["cluster"])
+        cnt, sums = tot.get(key, (0, None))
+        cur = list(r["sums"])
+        if sums is None:
+            merged = cur if cur else None
+        elif not cur:
+            merged = sums
+        elif len(cur) != len(sums):
+            raise ValueError(
+                f"{op}: vector dimension <> {len(sums)} (a partition "
+                f"holds {len(cur)}-dim vectors) - all vectors must share "
+                "one dim (operator docstring)"
+            )
+        else:
+            merged = [a + b for a, b in zip(sums, cur)]
+        tot[key] = (cnt + r["cnt"], merged)
+    return tot
+
+
 def _lloyd_multi(
     vecs: DataFrame,
     chains: dict,
@@ -301,18 +328,7 @@ def _lloyd_multi(
             )
             .collect()
         )
-        tot: dict = {}
-        for r in parts:
-            key = (r["name"], r["cluster"])
-            cnt, sums = tot.get(key, (0, None))
-            cur = list(r["sums"])
-            if sums is None:
-                merged = cur if cur else None
-            elif not cur:
-                merged = sums
-            else:
-                merged = [a + b for a, b in zip(sums, cur)]
-            tot[key] = (cnt + r["cnt"], merged)
+        tot = _fold_partials(parts, op)
         for name in live:
             new_cents = []
             for c, cv in enumerate(chains[name]["cents"]):

@@ -124,51 +124,3 @@ def simhash_incremental_pairs(
     )
     return cand.filter(F.col("hamming") <= max_hamming)
 
-
-def banded_pairs_from_fps(
-    index_fps: DataFrame,
-    shard_fps: DataFrame,
-    max_hamming: int = 2,
-    n_bits: int = 32,
-    n_bands: int = 4,
-) -> DataFrame:
-    """The band-join + Hamming-verify READ stage over PRE-COMPUTED
-    fingerprint frames: (doc_a, doc_b, hamming), doc_a < doc_b,
-    covering (shard x index) and (shard x shard) — exact recall for
-    ``max_hamming <= n_bands - 1`` by the pigeonhole argument.
-
-    Exists for callers that already hold the shard's (doc, fp_long)
-    frame — the streaming ingest twin (s26) fingerprints each
-    micro-batch inside ``foreachBatch`` and persists the fps, so the
-    read stage must start from fingerprints, not raw text (same
-    build/probe structure as :func:`simhash_incremental_pairs`, which
-    fingerprints the shard itself).
-    """
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"exact recall needs max_hamming <= n_bands-1 "
-            f"({max_hamming} > {n_bands - 1})"
-        )
-    ib = simhash_band_frame(index_fps, n_bits, n_bands)
-    sb = simhash_band_frame(shard_fps, n_bits, n_bands)
-    build = ib.unionByName(sb).alias("x")
-    probe = sb.alias("y")
-    cand = (
-        build.join(
-            probe,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc") != F.col("y.doc")),
-        )
-        .select(
-            F.least(F.col("x.doc"), F.col("y.doc")).alias("doc_a"),
-            F.greatest(F.col("x.doc"), F.col("y.doc")).alias("doc_b"),
-            F.bit_count(
-                F.col("x.fp_long").bitwiseXOR(F.col("y.fp_long"))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-        .distinct()
-    )
-    return cand.filter(F.col("hamming") <= max_hamming)

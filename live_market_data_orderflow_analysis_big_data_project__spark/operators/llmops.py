@@ -171,8 +171,7 @@ def minhash_band_stages(
     features: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The candidate-generation stages of MinHash LSH, exposed so
-    diagnostics (tools/probe_q91b_terms.py) measure EXACTLY the
-    production stages: returns ``(toks, sizes, bands)`` where ``toks``
+    diagnostics measure EXACTLY the production stages: returns ``(toks, sizes, bands)`` where ``toks``
     is the distinct (doc, tok) feature relation, ``sizes`` the per-doc
     token counts, and ``bands`` the (doc, band, bkey) banding relation
     whose per-(band, bkey) group sizes drive the bucket self-join
@@ -1006,7 +1005,7 @@ def fingerprint_overlap_pairs(
       with TWO consumers (df-count pass, pair pass), so it is
       persisted (memory-then-disk) rather than recomputed: the Horner
       hash touches every character of the corpus and dominates the
-      operator's cost (tools/probe_q124_terms.py: every downstream
+      operator's cost (docs/SCALING.md finding 6: every downstream
       cardinality is <= ~17x at 16x data, i.e. linear — the wall is
       this map stage), while the materialized selection is only
       ~n_grams/p rows of (id, int64) — at 100 TB text and p=61 a ~2%

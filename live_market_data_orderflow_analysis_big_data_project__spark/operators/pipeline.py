@@ -462,6 +462,8 @@ def dedup_clusters(
     id; each round a node takes the min of its and its neighbors'
     labels; converged when no label changes.  Rounds needed = graph
     diameter (near-dup components are tiny — pairs and small chains).
+    A graph that has not converged within ``max_iters`` rounds raises
+    ``ValueError`` rather than returning a partial labeling.
 
     ``edges`` must have columns (doc_a, doc_b).
 
@@ -472,10 +474,9 @@ def dedup_clusters(
     rounds on high-diameter graphs).  The per-round convergence check
     is a ``_chg`` flag computed INSIDE the label-update projection and
     counted off the already-checkpointed frame — one action per round,
-    no second join (the r7 bench regression was exactly that extra
-    old-vs-new join: tools/probe_q111_terms.py decomposes it; fusing
-    the flag removed ~0.4 s of the ~2.5 s wall at sf0.1, the rest
-    being the edge-finder pipeline the loop consumes).
+    no second join (a separate old-vs-new join cost ~0.4 s of the
+    ~2.5 s q111 wall at sf0.1, the rest being the edge-finder pipeline
+    the loop consumes).
     """
     sym = edges.selectExpr(f"doc_a AS {id_col}", "doc_b AS nbr").unionAll(
         edges.selectExpr(f"doc_b AS {id_col}", "doc_a AS nbr")
@@ -500,11 +501,16 @@ def dedup_clusters(
                 ).alias("_chg"),
             )
         ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
-        if changed == 0:
-            break
-    return labels.select(F.col(id_col), F.col("lbl").alias("cluster_id"))
+        if new_labels.filter(F.col("_chg")).count() == 0:
+            return labels.select(
+                F.col(id_col), F.col("lbl").alias("cluster_id")
+            )
+    raise ValueError(
+        f"dedup_clusters: labels still changing after max_iters="
+        f"{max_iters} rounds - no fixpoint (graph diameter exceeds the "
+        "round budget; raise max_iters)"
+    )
 
 
 def stratified_sample(

@@ -83,11 +83,8 @@ def rolling_active_from_pairs(
     HIDE a double-emission bug instead of surfacing it at the hash
     gate — this variant deliberately trusts its input's uniqueness.
 
-    NOTE deliberately a standalone twin of ``rolling_active_users``'s
-    tail rather than a shared core: q168 holds a standing driver row
-    whose closure is pinned by tools/stale_check.py, so refactoring
-    the batch path must wait for a round where q168 is in-window (it
-    re-enters at r17 by the age rule).
+    NOTE a standalone twin of ``rolling_active_users``'s tail rather
+    than a shared core; folding the two is open simplification work.
     """
     active = active.select(
         F.col(user_col).alias("_u"), F.col(day_col).alias("_d")

@@ -95,7 +95,7 @@ def setsim_join(
     the candidate join, hard-bounding candidates per token at
     ``max_bucket^2`` — and with it the dominant scale term, the verify
     join's candidates x element-list traffic (the 16x probe's
-    decomposition, tools/probe_q174_terms.py).  The global
+    decomposition, docs/SCALING.md finding 14).  The global
     rarest-first order already makes prefix tokens the RARE ones, so
     healthy corpora never populate a hot prefix bucket; a hot one
     means docs whose rarest shingles are still corpus-common

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "topk_rollup",
-    "topk_threshold_rollup",
     "topk_counts_to_rollup",
     "topk_rollup_windowed",
     "topk_merge",
@@ -127,82 +126,6 @@ def topk_counts_to_rollup(
             ).alias("topk"),
             F.coalesce(
                 F.max(F.when(F.col("_rn") > m, F.col("_n"))), F.lit(0)
-            ).alias("tail_bound"),
-        )
-    )
-
-
-def topk_threshold_rollup(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    bucket_col: str | Column,
-    item_col: str | Column,
-    theta: int = 64,
-) -> DataFrame:
-    """The Zipf-aware rollup constructor: per (group x bucket), keep
-    every item whose exact in-bucket count clears ``ceil(bucket_total
-    / theta)`` — the phi = 1/theta heavy-hitter cut (Manku-Motwani's
-    support threshold) — plus the bucket's top-1 item unconditionally
-    (so no bucket's map is empty and the certificate never divides by
-    silence).  ``tail_bound`` is the largest DROPPED count, exactly as
-    in :func:`topk_rollup`, so the merge/read certificate algebra
-    (``topk_merge`` / ``topk_read``) applies verbatim — this is a
-    second CONSTRUCTOR for the same certified structure, not a second
-    structure.
-
-    Why a threshold cut instead of a rank cut: the rank-m rollup
-    spends m rows per bucket regardless of shape.  Under the Zipf-like
-    item frequencies real corpora produce, the count mass is in a
-    short head — the threshold keeps exactly the items that can
-    matter at read time (anything dropped is provably below
-    total/theta, so tail_bound < ceil(total/theta)), which makes the
-    kept set SMALL and the certificate TIGHT on skewed buckets, and
-    degrades LOUDLY (top-1 only, certified=false at read) on uniform
-    buckets where no item clears the bar — error is detected, never
-    silent, the family contract.  Kept rows per bucket are bounded by
-    theta + 1 unconditionally (each kept item's count >= total/theta
-    and in-bucket counts are exact, so at most theta items clear the
-    cut).
-
-    Same one count shuffle as ``topk_rollup``; the bucket total is a
-    window aggregate over the already-aggregated count frame (no
-    second scan of the raw rows).
-    """
-    keys = list(group_cols)
-    b = _col(bucket_col)
-    bname = df.select(b).columns[0]
-    counts = (
-        df.select(*_cols(keys), b, _col(item_col).alias("_item"))
-        .where(F.col("_item").isNotNull())
-        .groupBy(*[F.col(c) for c in keys], F.col(bname), F.col("_item"))
-        .agg(F.count("*").alias("_n"))
-    )
-    bw = Window.partitionBy(*[F.col(c) for c in keys], F.col(bname))
-    rw = bw.orderBy(F.desc("_n"), F.asc("_item"))
-    ranked = counts.select(
-        *_cols(keys),
-        F.col(bname),
-        "_item",
-        "_n",
-        F.floor((F.sum("_n").over(bw) + theta - 1) / theta)
-        .cast("long")
-        .alias("_thr"),
-        F.row_number().over(rw).alias("_rn"),
-    )
-    kept = (F.col("_n") >= F.col("_thr")) | (F.col("_rn") == 1)
-    return (
-        ranked.withColumn("_keep", kept)
-        .groupBy(*[F.col(c) for c in keys], F.col(bname))
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(F.col("_keep"), F.struct("_item", "_n"))
-                    )
-                )
-            ).alias("topk"),
-            F.coalesce(
-                F.max(F.when(~F.col("_keep"), F.col("_n"))), F.lit(0)
             ).alias("tail_bound"),
         )
     )

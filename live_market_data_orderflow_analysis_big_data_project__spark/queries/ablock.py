@@ -1,9 +1,6 @@
 """A-block — analytics / time-series / data-quality operator gate
-entries, promoted from ``queries/staging.py`` in the round-9 window
-rotation (docs/ROTATION_r9.md).  Each entry was authored, oracle-
-verified at three scale factors, 16x-probed, plan-audited and
-determinism-screened BEFORE promotion; the move here is the planned
-dict move, code verbatim.
+entries.  Each entry is oracle-verified at three scale factors
+(SWEEP.json), 16x-probed, plan-audited and determinism-screened.
 
 Families (operator modules under ``operators/``): KMV theta-sketch
 set ops (kmv.py), typo-tolerant entity matching (fuzzy.py),
@@ -1387,13 +1384,12 @@ FROM per_ep GROUP BY 1, 2
 """
 
 # --------------------------------------------------------------------------
-# Round-10 promotions (docs/ROTATION_r10.md), moved verbatim from
-# queries/staging.py: the sketch-rollup family (q142 histogram report,
-# q143 certified top-k, q144 HLL overlap), q149 incremental SimHash
-# near-dup, q152 MAD outliers, the graph family (q170 triangle counts /
-# q171 integer-quantized PageRank, operators/graph.py), q172 the
+# The sketch-rollup family (q142 histogram report, q143 certified top-k,
+# q144 HLL overlap), q149 incremental SimHash near-dup, q152 MAD
+# outliers, the graph family (q170 triangle counts / q171
+# integer-quantized PageRank, operators/graph.py), q172 the
 # WITHIN-clause time-constrained funnel, and q173 boolean retrieval.
-# The streaming twins s14/s15 moved to queries/sblock.py the same round.
+# Their streaming twins s14/s15 live in queries/sblock.py.
 # --------------------------------------------------------------------------
 
 def _events_day(spark, sf):
@@ -2167,11 +2163,10 @@ Q178_SQL = (
 
 
 # --------------------------------------------------------------------------
-# Round-12 promotions (docs/ROTATION_r12.md), moved verbatim from
-# queries/staging.py: q179 grouped-agg pandas UDF, q180 rank-spaced
-# quantile rollup, q181 weighted ticket-race sample, q182 NEAR/k
-# proximity retrieval.  s19 (the streaming quantile twin) moves to
-# sblock.py and imports ``_q180_sql`` from here — the splice coupling.
+# q179 grouped-agg pandas UDF, q180 rank-spaced quantile rollup, q181
+# weighted ticket-race sample, q182 NEAR/k proximity retrieval.  s19
+# (the streaming quantile twin, sblock.py) imports ``_q180_sql`` from
+# here — the splice coupling.
 # --------------------------------------------------------------------------
 
 _CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -2435,12 +2430,11 @@ FROM pairs GROUP BY 1
 
 
 # --------------------------------------------------------------------------
-# Round-13 promotions (docs/ROTATION_r13.md), moved verbatim from
-# queries/staging.py: q183 integer-quantized k-means, q184 multi-touch
-# conversion attribution, q185 interpolated-bigram LM fluency, q186
-# grouped OLS trend.  s20 (the streaming PSI monitor) moves to
-# sblock.py; staging's q190 oracle imports ``_Q185_TOKS`` from here —
-# the shared-tokenizer coupling.
+# q183 integer-quantized k-means, q184 multi-touch conversion
+# attribution, q185 interpolated-bigram LM fluency, q186 grouped OLS
+# trend.  s20 (the streaming PSI monitor) lives in sblock.py; q190's
+# oracle imports ``_Q185_TOKS`` from here — the shared-tokenizer
+# coupling.
 # --------------------------------------------------------------------------
 
 _Q183_K = 4
@@ -2709,15 +2703,11 @@ FROM m
 
 
 # --------------------------------------------------------------------------
-# Round-14 promotions (docs/ROTATION_r14.md), moved verbatim from
-# queries/staging.py: q187 lag-k autocorrelation, q188 cluster-safe
-# train/val/test split, q189 daily VWAP + realized volatility, q190 BPE
-# tokenizer training, q191 product-quantization ADC top-k, q192 seasonal
-# day-of-week outlier screen.  s21 (streaming PIT enrichment) moves to
-# sblock.py.  Each was staged at r12 close and carries two rounds of
-# standing pytest oracle evidence (tests/test_next_rotation.py at 2 sfs)
-# plus a hand sf0.1 hash-pass, a 16x scale probe (SCALING.md finding 17),
-# and plan/determinism/dtype audits — promotion is the planned dict move.
+# q187 lag-k autocorrelation, q188 cluster-safe train/val/test split,
+# q189 daily VWAP + realized volatility, q190 BPE tokenizer training,
+# q191 product-quantization ADC top-k, q192 seasonal day-of-week
+# outlier screen (16x scale probe: SCALING.md finding 17).  s21
+# (streaming PIT enrichment) lives in sblock.py.
 # --------------------------------------------------------------------------
 
 _Q187_LAGS = (1, 2, 3)
@@ -3208,18 +3198,13 @@ FROM dev v JOIN mad m USING (event_type, dow)
 
 
 # --------------------------------------------------------------------------
-# Round-15 promotion (docs/ROTATION_r15.md), moved verbatim from
-# queries/staging.py: q193 IVF-PQ top-k (coarse quantizer composed with
-# PQ ADC — the production FAISS index shape), q194 batched BPE training
+# q193 IVF-PQ top-k (coarse quantizer composed with PQ ADC — the
+# production FAISS index shape), q194 batched BPE training
 # (symbol-disjoint top-m merges per round), q195 hyperplane bit-LSH
 # top-k (binary-signature ANN, fully hash-gated), q196 char-entropy
 # quality screen.  s22/s23/s24/s25 (streaming as-of enrichment, top-k
-# ranking drift, CUSUM drift, rolling distinct actives) move to
-# sblock.py.  q193/q194 were staged at r13 close (two standing rounds
-# of pytest oracle evidence at 2 sfs), q195/q196 during r14 (one — the
-# trade the exact-fill window arithmetic forced, docs/ROTATION_r15.md);
-# all carry a hand sf0.1 hash-pass, a 16x scale probe (SCALING.md) and
-# plan/determinism/dtype audits — promotion is the planned dict move.
+# ranking drift, CUSUM drift, rolling distinct actives) live in
+# sblock.py.
 # --------------------------------------------------------------------------
 
 # q195's oracle replays the SAME deterministic hyperplane matrix the

@@ -530,9 +530,8 @@ FROM j
 """
 
 # --------------------------------------------------------------------------
-# Round-10 promotions (docs/ROTATION_r10.md), moved verbatim from
-# queries/staging.py: s14 streaming windowed HLL rollup and s15 the
-# streaming-maintained top-k rollup (batch entries moved to ablock.py).
+# s14 streaming windowed HLL rollup and s15 the streaming-maintained
+# top-k rollup (their batch twins live in ablock.py).
 # --------------------------------------------------------------------------
 
 def s14_hll_windowed_stream(spark, sf):
@@ -663,10 +662,9 @@ from .eblock import Q77_SQL as S18_SQL  # noqa: E402
 
 
 # --------------------------------------------------------------------------
-# Round-12 promotion (docs/ROTATION_r12.md), moved verbatim from
-# queries/staging.py: s19 streaming quantile rollup — the batch twin
-# q180 lives in ablock.py; the oracle is built by ablock's _q180_sql
-# so the two stay coupled (the S17/Q150 splice pattern).
+# s19 streaming quantile rollup — the batch twin q180 lives in
+# ablock.py; the oracle is built by ablock's _q180_sql so the two stay
+# coupled (the S17/Q150 splice pattern).
 # --------------------------------------------------------------------------
 
 from .ablock import _CENTS, _Q180_K, _Q180_QS, _q180_sql  # noqa: E402
@@ -725,10 +723,8 @@ assert "AND date_trunc('day', ts)" in S19_SQL
 
 
 # --------------------------------------------------------------------------
-# Round-13 promotion (docs/ROTATION_r13.md), moved verbatim from
-# queries/staging.py: s20 streaming PSI drift monitor — q167's
-# monitoring loop with the data-sized histogram stage streamed (the
-# s17/s19 production split).
+# s20 streaming PSI drift monitor — q167's monitoring loop with the
+# data-sized histogram stage streamed (the s17/s19 production split).
 # --------------------------------------------------------------------------
 
 _S20_SPLIT = "2024-01-16"
@@ -846,10 +842,9 @@ FROM cells c JOIN tot t ON c.event_type = t.event_type AND c.day = t.day
 
 
 # --------------------------------------------------------------------------
-# Round-14 promotion (docs/ROTATION_r14.md), moved verbatim from
-# queries/staging.py: s21 streaming point-in-time enrichment — the
-# STATELESS stream-static interval join (no watermark, no state store,
-# no splice), the third point on the s19/s20 splice spectrum.
+# s21 streaming point-in-time enrichment — the STATELESS stream-static
+# interval join (no watermark, no state store, no splice), the third
+# point on the s19/s20 splice spectrum.
 # --------------------------------------------------------------------------
 
 def s21_pit_enrich_stream(spark, sf):
@@ -916,14 +911,11 @@ S21_SQL = _s21_sql()
 
 
 # --------------------------------------------------------------------------
-# Round-15 promotion (docs/ROTATION_r15.md), moved verbatim from
-# queries/staging.py: s22 streaming as-of enrichment (the batch
-# asof_join/q25 capability as applyInPandasWithState with event-time
-# timeouts — the fourth point on the streaming-state spectrum), s23
-# streaming top-k ranking drift, s24 streaming CUSUM level-shift
-# drift, s25 streaming rolling distinct actives (q168's production
-# split).  The batch q-members of the cohort (q193-q196) move to
-# ablock.py.  Evidence class per entry: docs/ROTATION_r15.md.
+# s22 streaming as-of enrichment (the batch asof_join/q25 capability as
+# applyInPandasWithState with event-time timeouts — the fourth point on
+# the streaming-state spectrum), s23 streaming top-k ranking drift, s24
+# streaming CUSUM level-shift drift, s25 streaming rolling distinct
+# actives (q168's production split).
 # --------------------------------------------------------------------------
 
 def s22_asof_enrich_stream(spark, sf):

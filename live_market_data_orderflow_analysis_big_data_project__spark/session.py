@@ -111,9 +111,19 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder.master(master).appName(app_name)
-    for k, v in ENGINE_CONFS.items():
+    for k, v in _session_confs(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark = builder.getOrCreate()
+    return ensure_engine_confs(spark)
+
+
+def _session_confs(
+    master: str, shuffle_partitions: int, extra_conf: dict[str, str] | None
+) -> dict[str, str]:
+    """Every builder conf ``get_spark`` applies for ``master``; later
+    keys of ``extra_conf`` override the engine defaults."""
+    confs = dict(ENGINE_CONFS)
+    confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # Driver heap (r16, guide §5 "memory layout"): in local[N] mode the
     # driver JVM *is* the executor — all N task threads share its heap,
     # and Spark's default is a bare -Xmx1g.  At N=32 that is ~13 MB of
@@ -141,7 +151,7 @@ def get_spark(
         except (OSError, ValueError, IndexError):
             pass
         mem_mb = str(want)
-    builder = builder.config("spark.driver.memory", f"{mem_mb}m")
+    confs["spark.driver.memory"] = f"{mem_mb}m"
     # JIT code cache (r16): a long-lived session running hundreds of
     # distinct queries generates thousands of Janino/whole-stage-codegen
     # classes; the JVM default ReservedCodeCacheSize (240 MB) fills
@@ -151,33 +161,32 @@ def get_spark(
     # resident.  Appended (not overwritten) if the caller passed its own
     # extraJavaOptions via extra_conf.
     _jvm_opts = "-XX:ReservedCodeCacheSize=512m"
-    # Scratch space (r16, guide §2.1/§6): spark.local.dir (shuffle
-    # files, spills) and java.io.tmpdir (streaming temp checkpoints —
-    # offset/commit logs and HDFS-backed state stores fsync per
-    # micro-batch) default to /tmp, which on this host is a shared
-    # spinning block device; the streaming suite measured 2.5-3.7x
-    # faster with scratch on the local tmpfs (s02 7.4 s -> 2.9 s,
-    # s19 19.1 s -> 5.1 s under disk contention).  On a real cluster
-    # spark.local.dir is the deployment's NVMe scratch — same posture,
-    # this just picks the fastest local medium here.  Override with
-    # SPARK_GRAFT_SCRATCH; empty string disables.
+    # Scratch space (guide §2.1/§6): spark.local.dir (shuffle files,
+    # spills) and java.io.tmpdir (streaming temp checkpoints — offset/
+    # commit logs and HDFS-backed state stores fsync per micro-batch)
+    # default to /tmp; the streaming suite measured 2.5-3.7x faster with
+    # scratch on a local tmpfs (s02 7.4 s -> 2.9 s, s19 19.1 s -> 5.1 s
+    # under disk contention).  The /dev/shm default applies to a
+    # local[...] master only: on a real cluster spark.local.dir is the
+    # deployment's scratch and the engine leaves it alone.  Override
+    # with SPARK_GRAFT_SCRATCH (any master); empty string disables.
     scratch = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if scratch is None and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
+    if (
+        scratch is None
+        and (master == "local" or master.startswith("local["))
+        and os.path.isdir("/dev/shm")
+        and os.access("/dev/shm", os.W_OK)
     ):
         scratch = "/dev/shm/spark_graft_local"
     if scratch:
         os.makedirs(scratch, exist_ok=True)
-        builder = builder.config("spark.local.dir", scratch)
+        confs["spark.local.dir"] = scratch
         _jvm_opts += f" -Djava.io.tmpdir={scratch}"
     _ejo_key = "spark.driver.extraJavaOptions"
-    if extra_conf and _ejo_key in extra_conf:
-        extra_conf = dict(extra_conf)
+    confs[_ejo_key] = _jvm_opts
+    confs["spark.ui.enabled"] = "false"
+    extra_conf = dict(extra_conf or {})
+    if _ejo_key in extra_conf:
         extra_conf[_ejo_key] = f"{extra_conf[_ejo_key]} {_jvm_opts}"
-    else:
-        builder = builder.config(_ejo_key, _jvm_opts)
-    builder = builder.config("spark.ui.enabled", "false")
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return ensure_engine_confs(spark)
+    confs.update(extra_conf)
+    return confs

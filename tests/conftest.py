@@ -1,10 +1,14 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout this conftest lives in, so a clone tests its own package
+# and tools rather than whichever copy happens to be installed.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
 
 from live_market_data_orderflow_analysis_big_data_project__spark import get_spark
 

@@ -116,8 +116,8 @@ def test_recall_floor_vs_exact_bruteforce(spark):
     vs the exact d2 top-10 is a constant — floors are the measured
     means minus margin (sf0.001: 0.93, sf0.01: 0.83; the uniform-
     sphere fixture is the ADVERSARIAL case for sign-LSH, the same
-    regime behind q92b's 0.65 IVF floor; sf0.1 measures 0.57 by hand,
-    recorded in the staging docstring)."""
+    regime behind q92b's 0.65 IVF floor; sf0.1 measures 0.57 by
+    hand)."""
     import numpy as np
 
     from live_market_data_orderflow_analysis_big_data_project__spark.operators.cluster import (  # noqa: E501

@@ -1,6 +1,6 @@
 """operators/cluster.py — integer-quantized Lloyd's k-means.
 
-The staged gate (q183) proves row parity with the unrolled-CTE SQL
+The q183 gate proves row parity with the unrolled-CTE SQL
 oracle at two sfs; these pin the algorithm itself against a pure-Python
 model (quantization, md5 seeding, argmin tie-break, floor-mean update,
 empty-cluster carry), the |x| <= 1 guard, partitioning invariance, the
@@ -131,6 +131,27 @@ def test_partitioning_invariance(spark):
         ).collect()
     }
     assert a == b
+
+
+def test_ragged_partition_widths_fail_loudly():
+    """The driver fold of per-partition Lloyd partials: equal widths
+    sum element-wise, an empty partition contributes its count only,
+    and two partitions reporting different vector widths for one chain
+    raise the dimension error instead of summing a truncated prefix."""
+    from live_market_data_orderflow_analysis_big_data_project__spark.operators.cluster import (  # noqa: E501
+        _fold_partials,
+    )
+
+    part0 = [{"name": "km", "cluster": 0, "cnt": 1, "sums": [10, 20]}]
+    part1 = [{"name": "km", "cluster": 0, "cnt": 2, "sums": [1, 2]},
+             {"name": "km", "cluster": 1, "cnt": 0, "sums": []}]
+    assert _fold_partials(part0 + part1, "kmeans_quantized") == {
+        ("km", 0): (3, [11, 22]),
+        ("km", 1): (0, None),
+    }
+    ragged = [{"name": "km", "cluster": 0, "cnt": 1, "sums": [1, 2, 3]}]
+    with pytest.raises(ValueError, match="kmeans_quantized: vector dimension"):
+        _fold_partials(part0 + ragged, "kmeans_quantized")
 
 
 def test_fixture_binding(spark):

@@ -1,7 +1,7 @@
 """operators/kmv.py — KMV (bottom-k theta) sketch algebra.
 
-The staged gate (tests/test_next_rotation.py::q145_kmv_setops) proves
-the unsaturated/exact regime against DuckDB at two sfs; these tests
+The q145_kmv_setops oracle entry proves the unsaturated/exact regime
+against DuckDB at three sfs (SWEEP.json); these tests
 pin what the gate cannot: saturated-regime estimation error, the
 set-op estimates under saturation (the regime production runs in at
 100 TB cardinalities), merge losslessness/idempotence, and the

@@ -117,6 +117,22 @@ def test_dedup_clusters_transitive_chain(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_dedup_clusters_hand_components(spark):
+    # chain + triangle + pair, with duplicate, reversed and self edges
+    # tolerated; a self-loop's node exists, alone
+    pairs = (
+        [(i, i + 1) for i in range(5)]
+        + [(200, 201), (201, 202), (202, 200)]
+        + [(300, 301), (301, 300), (300, 301), (7, 7)]
+    )
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(edges).collect()}
+    assert out == (
+        {i: 0 for i in range(6)}
+        | {200: 200, 201: 200, 202: 200, 300: 300, 301: 300, 7: 7}
+    )
+
+
 def test_dedup_clusters_long_chain_converges(spark):
     # path graph 0-1-2-...-9: worst-case diameter for label propagation
     edges = spark.createDataFrame(
@@ -124,6 +140,25 @@ def test_dedup_clusters_long_chain_converges(spark):
     )
     out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(edges).collect()}
     assert out == {i: 0 for i in range(10)}
+
+
+def test_dedup_clusters_diameter_100_chain_raises(spark):
+    # a diameter-100 path needs ~100 rounds: the default 15-round budget
+    # raises instead of returning a partial labeling
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(100)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="no fixpoint"):
+        dedup_clusters(chain)
+
+
+def test_dedup_clusters_nonconvergence_raises_loudly(spark):
+    # the 0-...-9 path converges at the default budget but not in one round
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="max_iters=1 rounds"):
+        dedup_clusters(edges, max_iters=1)
 
 
 def test_stratified_sample_quota_and_determinism(spark):

@@ -1218,234 +1218,3 @@ def test_rolling_active_from_pairs_equals_trailing_window_model(
         wau = len({u for u, dd in pairs if d - w < dd <= d})
         want[f"2024-01-{d:02d}"] = (dau, wau)
     assert got == want
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),  # edges
-        min_size=0,
-        max_size=40,
-    )
-)
-def test_cc_bigstar_equals_union_find(spark, edges):
-    """cc_bigstar == a pure-Python union-find on arbitrary edge lists
-    (self-loops and duplicates included) — the alternating-star
-    contraction against the reference a reviewer would write."""
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.cc import (  # noqa: E501
-        cc_bigstar,
-    )
-
-    if not edges:
-        return
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {(n, find(n)) for n in parent}
-    # union-find roots are component minima here because unions always
-    # point the larger root at the smaller one
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {(r.doc_id, r.cluster_id) for r in cc_bigstar(df).collect()}
-    assert got == want
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        # a 3-char alphabet forces repeated grams (tie-rule coverage)
-        st.text(alphabet="abc", max_size=40),
-        min_size=1,
-        max_size=4,
-    )
-)
-def test_winnow_matches_model_and_spans_are_literal(spark, texts):
-    """winnow_fingerprints == the pure-Python per-window-min model on
-    arbitrary low-alphabet texts (repeats exercise the rightmost-tie
-    rule), and every span substring_dup_spans reports is a literal
-    shared substring of both docs."""
-    import hashlib
-
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.winnow import (  # noqa: E501
-        substring_dup_spans,
-        winnow_fingerprints,
-    )
-
-    k, w = 4, 3
-
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    def model(text):
-        n = len(text) - k + 1
-        if len(text) < k + w - 1:
-            return set()
-        grams = [(p, text[p - 1 : p - 1 + k]) for p in range(1, n + 1)]
-        out = set()
-        for s in range(1, n - w + 2):
-            win = grams[s - 1 : s - 1 + w]
-            p, g = min(win, key=lambda pg: (h60(pg[1]), -pg[0]))
-            out.add((p, g))
-        return out
-
-    df = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    got = {
-        (r.doc_id, r.pos, r.gram)
-        for r in winnow_fingerprints(df, k=k, w=w).collect()
-    }
-    want = {
-        (i, p, g) for i, t in enumerate(texts) for (p, g) in model(t)
-    }
-    assert got == want
-
-    for r in substring_dup_spans(df, k=k, w=w, max_df=50).collect():
-        a, b = texts[r.doc_a], texts[r.doc_b]
-        span = r.max_span_chars
-        assert any(
-            a[i : i + span] in b for i in range(len(a) - span + 1)
-        ), (a, b, span)
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 2),  # bucket
-            st.integers(0, 9),  # item
-        ),
-        min_size=1,
-        max_size=60,
-    ),
-    st.integers(2, 8),
-)
-def test_threshold_rollup_invariants(spark, rows, theta):
-    """topk_threshold_rollup on arbitrary multisets: per-bucket kept
-    size <= theta + 1, tail_bound < ceil(bucket_total/theta), and the
-    merged [est, upper] brackets every reported item's true count."""
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.topk import (  # noqa: E501
-        topk_merge,
-        topk_threshold_rollup,
-    )
-
-    df = spark.createDataFrame(
-        [("g", b, i) for b, i in rows], "g string, bucket long, item long"
-    )
-    roll = topk_threshold_rollup(
-        df, ["g"], "bucket", "item", theta=theta
-    ).localCheckpoint(eager=True)
-    from collections import Counter
-
-    per_bucket = {}
-    for b, i in rows:
-        per_bucket.setdefault(b, Counter())[i] += 1
-    for r in roll.collect():
-        total = sum(per_bucket[r.bucket].values())
-        thr = -(-total // theta)
-        assert len(r.topk) <= theta + 1, (r.bucket, r.topk)
-        assert r.tail_bound < thr or r.tail_bound == 0, r
-        for item, n in r.topk.items():
-            assert per_bucket[r.bucket][item] == n
-    true = Counter(i for _, i in rows)
-    for r in topk_merge(roll, ["g"]).collect():
-        assert r.est <= true[r.item] <= r.upper, (r.item, r.est, r.upper)
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 4),   # item
-            st.integers(0, 6),   # rater
-            st.sampled_from("abc"),  # label
-            st.integers(0, 50),  # ts seconds
-            st.integers(0, 999),  # event id
-        ),
-        min_size=1,
-        max_size=40,
-        unique_by=lambda r: r[4],  # distinct event ids
-    )
-)
-def test_label_agreement_matches_python_model(spark, rows):
-    """label_agreement == the reviewer-written model on arbitrary
-    rating multisets: latest-wins dedup by (ts, id), majority with
-    (count desc, label asc) ties, pair counting, and the
-    fixed-parenthesization kappa."""
-    import datetime as dt
-    from collections import Counter
-
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.labels import (  # noqa: E501
-        label_agreement,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (i, r, lb, dt.datetime(2024, 1, 1, 0, 0, s), e)
-            for i, r, lb, s, e in rows
-        ],
-        "item long, user_id long, event_type string, ts timestamp,"
-        " event_id long",
-    )
-    out = label_agreement(df, "item").collect()
-
-    # model
-    final = {}
-    for i, r, lb, s, e in rows:
-        k = (i, r)
-        if k not in final or (s, e) > (final[k][0], final[k][1]):
-            final[k] = (s, e, lb)
-    per_item: dict[int, Counter] = {}
-    for (i, _r), (_s, _e, lb) in final.items():
-        per_item.setdefault(i, Counter())[lb] += 1
-    items = {r.item_id: r for r in out if r.kind == "item"}
-    assert set(items) == set(per_item)
-    N = P = C = 0
-    marg: Counter = Counter()
-    for i, cnt in per_item.items():
-        n = sum(cnt.values())
-        conc = sum(v * (v - 1) for v in cnt.values())
-        maj_lb, maj_n = min(
-            cnt.items(), key=lambda kv: (-kv[1], kv[0])
-        )
-        r = items[i]
-        assert (
-            r.n_raters,
-            r.n_pairs,
-            r.n_concordant,
-            r.majority_label,
-            r.majority_share_ppm,
-            r.is_unanimous,
-        ) == (
-            n,
-            n * (n - 1),
-            conc,
-            maj_lb,
-            maj_n * 1_000_000 // n,
-            maj_n == n,
-        ), i
-        N += n
-        P += n * (n - 1)
-        C += conc
-        marg.update(cnt)
-    s = [r for r in out if r.kind == "summary"][0]
-    Q = sum(v * v for v in marg.values())
-    assert (s.n_raters, s.n_pairs, s.n_concordant) == (N, P, C)
-    g_lb, g_n = min(marg.items(), key=lambda kv: (-kv[1], kv[0]))
-    assert s.majority_label == g_lb
-    assert s.majority_share_ppm == g_n * 1_000_000 // N
-    if P > 0 and N * N != Q:
-        pe = Q / (N * N)
-        assert s.kappa4 == round((C / P - pe) / (1.0 - pe), 4)
-    else:
-        assert s.kappa4 is None

@@ -4,13 +4,9 @@ ground-truth proof the standing q163 oracle can't afford at sf0.1."""
 from __future__ import annotations
 
 import duckdb
-import sys
-
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
-
-from check_oracle import TABLES, hash_rows  # noqa: E402
+from check_oracle import TABLES, hash_rows
 
 from live_market_data_orderflow_analysis_big_data_project__spark.operators.skyline import (  # noqa: E501
     skyline_2d,

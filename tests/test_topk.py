@@ -214,92 +214,3 @@ def test_windowed_batch_counts_match_direct_rollup(spark):
     )
     assert len(j) > 0 and all(r.ok for r in j)
 
-
-def _docs_tokens(spark):
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.llmops import (  # noqa: E501
-        tokens_col,
-    )
-
-    return load_table(spark, SF001, "documents").select(
-        "lang", "source", F.explode(tokens_col("text")).alias("tok")
-    )
-
-
-def test_threshold_rollup_brackets_truth_and_bounds_space(spark):
-    """The q199 constructor (topk_threshold_rollup): every kept item's
-    merged [est, upper] brackets its true count; kept rows per bucket
-    never exceed theta + 1; every dropped count is provably below
-    ceil(bucket_total / theta) (tail_bound < thr); and a certified
-    read returns exactly the true top-k set — the same family
-    contract, second constructor."""
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.topk import (  # noqa: E501
-        topk_threshold_rollup,
-    )
-
-    theta = 64
-    d = _docs_tokens(spark)
-    exact = {
-        (r.lang, r.tok): r.n
-        for r in d.groupBy("lang", "tok")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    roll = topk_threshold_rollup(
-        d, ["lang"], "source", "tok", theta=theta
-    ).localCheckpoint(eager=True)
-    # drops happen AND the space bound holds
-    assert roll.agg(F.max("tail_bound")).collect()[0][0] > 0
-    assert (
-        roll.agg(F.max(F.size("topk"))).collect()[0][0] <= theta + 1
-    )
-    # tail_bound < ceil(total/theta): the dropped mass is provably thin
-    totals = d.groupBy("lang", "source").agg(F.count("*").alias("t"))
-    joined = roll.join(totals, ["lang", "source"]).select(
-        "tail_bound", F.floor((F.col("t") + theta - 1) / theta).alias("thr")
-    )
-    assert joined.where(F.col("tail_bound") >= F.col("thr")).count() == 0
-
-    merged = topk_merge(roll, ["lang"])
-    for r in merged.collect():
-        true = exact[(r.lang, r.item)]
-        assert r.est <= true <= r.upper, (r.lang, r.item, r.est, true, r.upper)
-
-    read = topk_read(merged, ["lang"], k=5).collect()
-    true_topk = {}
-    for (lang, tok), n in exact.items():
-        true_topk.setdefault(lang, []).append((n, tok))
-    by_group = {}
-    for r in read:
-        by_group.setdefault(r.lang, []).append(r)
-    outcomes = set()
-    for lang, rows in by_group.items():
-        assert len(rows) == 5
-        outcomes.add(rows[0].certified)
-        if rows[0].certified:
-            want = {
-                tok
-                for n, tok in sorted(
-                    true_topk[lang], key=lambda t: (-t[0], t[1])
-                )[:5]
-            }
-            assert {r.item for r in rows} == want, lang
-    # the gate fixture exercises BOTH certificate outcomes at this sf
-    assert outcomes == {True, False}, outcomes
-
-
-def test_threshold_rollup_degrades_loudly_on_uniform_buckets(spark):
-    """On a near-uniform bucket nothing clears total/theta: the map
-    collapses to the unconditional top-1 and the read refuses to
-    certify — detected, never silent (measured on the events user
-    frame, the motivating non-Zipf case)."""
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.topk import (  # noqa: E501
-        topk_threshold_rollup,
-    )
-
-    ev = _events(spark)
-    roll = topk_threshold_rollup(
-        ev, ["event_type"], "day", "user_id", theta=16
-    ).localCheckpoint(eager=True)
-    assert roll.agg(F.max(F.size("topk"))).collect()[0][0] == 1
-    read = topk_read(topk_merge(roll, ["event_type"]), ["event_type"], k=5)
-    assert read.where(F.col("certified")).count() == 0

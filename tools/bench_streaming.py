@@ -35,7 +35,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # host-load provenance at import (== harness start) — the bench.py rule
 _LOADAVG = [round(x, 2) for x in os.getloadavg()]

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
@@ -30,7 +31,7 @@ from datetime import date, datetime
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DEFAULT = "/root/testdata/sf0.01"
 TABLES = (

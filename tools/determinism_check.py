@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_oracle import hash_rows  # reuse the gate's canonicalizer  # noqa: E402
@@ -33,19 +33,8 @@ def main() -> None:
     spark = get_spark("determinism-check")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from live_market_data_orderflow_analysis_big_data_project__spark.queries.staging import (  # noqa: E501
-        STAGED_QUERIES,
-    )
-
     hash_keys = set(ent.oracle_sql())
     qs = {k: v for k, v in ent.queries().items() if k in hash_keys}
-    # staged next-rotation entries face the same hash gate at
-    # promotion — batch ones get the same partition-shuffle screen
-    # (streaming s* entries re-run whole queries; their batching
-    # independence is pinned by the boundary tests instead)
-    qs.update(
-        {k: v for k, v in STAGED_QUERIES.items() if not k.startswith("s")}
-    )
 
     bad = []
     for key, fn in qs.items():

@@ -17,13 +17,14 @@ Usage: python tools/driver_sim.py [sf_dir] [--limit N]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from check_oracle import TABLES, hash_rows, norm_cell  # noqa: E402  (same dir)
 

@@ -22,12 +22,13 @@ Usage: python tools/dtype_audit.py [sf_dir] [query_key ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from check_oracle import TABLES  # noqa: E402  (same dir)
 
@@ -43,15 +44,6 @@ def main() -> None:
     from live_market_data_orderflow_analysis_big_data_project__spark import get_spark
 
     qs, osql = ent.queries(), ent.oracle_sql()
-    # staged next-rotation entries face the same driver comparator on
-    # promotion — audit them before they can ship the q147 HUGEINT class
-    from live_market_data_orderflow_analysis_big_data_project__spark.queries.staging import (  # noqa: E501
-        STAGED_ORACLE,
-        STAGED_QUERIES,
-    )
-
-    qs = {**qs, **STAGED_QUERIES}
-    osql = {**osql, **STAGED_ORACLE}
     if keys:
         qs = {k: qs[k] for k in keys}
 

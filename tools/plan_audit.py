@@ -19,10 +19,11 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DEFAULT = "/root/testdata/sf0.01"
 
@@ -47,8 +48,6 @@ NON_EQUI_OK = {
     "q106b_decontaminate_bloom",  # 1-row bloom-bitmap crossJoin (the
                                   # broadcast word-map ride-in, zorder
                                   # scalar-stats pattern)
-    # Round-8 staged cohort (audited pre-promotion; the r9 rotation
-    # promoted most into queries/ablock.py — q144/q149 remain staged):
     "q144_hll_overlap",         # 1-row exactness-boundary scalar crossJoin
     "q145_kmv_setops",          # pair joins on the |labels|-row sketch frame
     "q149_incremental_simhash",  # 1-row split-scalar crossJoin (q137 pattern)
@@ -59,19 +58,16 @@ NON_EQUI_OK = {
     "q159_basket_lift",         # 1-row basket-count crossJoin (zorder pattern)
     "q167_psi_drift",           # keys x n_bins(10)-row bin-grid broadcast
                                 # crossJoin (the gapfill grid pattern)
-    # Round-10 staged cohort (audited pre-promotion):
     "q176_collocations",        # 1-row bigram-total scalar crossJoin
                                 # (the q117/q122 N-scalar pattern)
     "q178_skew_report",         # 1-row p99-scalar broadcast crossJoin
                                 # (the q157 recombine pattern)
-    # Round-12 staged cohort (audited pre-promotion):
     "q183_kmeans",              # k-row centroid-frame broadcast crossJoin
                                 # per assignment pass — the distance argmin
                                 # IS vectors x k centroids by design
                                 # (operators/cluster.py docstring)
     "q185_bigram_nll",          # 1-row corpus-total scalar crossJoin
                                 # (the q176/q117 N-scalar pattern)
-    # Round-12 staged r14 cohort (audited pre-promotion):
     "q187_autocorr",            # two 1-row [d0, d1] day-span-bounds
                                 # broadcast crossJoins building the dense
                                 # grid (the q150 gapfill pattern)
@@ -79,23 +75,16 @@ NON_EQUI_OK = {
                                 # subspace assign, plus the n_queries x k
                                 # ADC-table crossJoin (both domain-bounded
                                 # broadcast frames by design)
-    # Round-13 staged r15 cohort (audited pre-promotion):
     "q193_ivfpq_topk",          # q191's centroid/ADC-table broadcast
                                 # crossJoins plus the coarse-probe
                                 # n_queries x coarse_k crossJoin — all
                                 # domain-bounded broadcast frames
-    # Round-14 staged r15 cohort (audited pre-promotion):
     "q195_bitlsh_topk",         # the n_queries-row signature frame
                                 # broadcast-crossJoined against the
                                 # (id, sig) frame for Hamming candidate
                                 # generation — candidates are cut to
                                 # top-C per query before any vector
                                 # traffic (operators/bitlsh.py)
-    # Round-15 staged r18 cohort (audited pre-promotion):
-    "q200_label_agreement",     # 1-row x 1-row recombine of the item
-                                # totals with the label-marginal
-                                # aggregate (the q157 split-aggregate
-                                # pattern)
 }
 
 # Global sorts that are BOUNDED by construction (not whole-dataset):
@@ -125,14 +114,7 @@ def main() -> None:
     spark = get_spark("plan-audit", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from live_market_data_orderflow_analysis_big_data_project__spark.queries.staging import (  # noqa: E501
-        STAGED_QUERIES,
-    )
-
     audit = dict(ent.queries())
-    # staged next-rotation entries are plan-audited BEFORE promotion so
-    # a scale red-flag can never enter the window unseen
-    audit.update({k: v for k, v in STAGED_QUERIES.items() if not k.startswith("s")})
 
     rows, problems = [], []
     for key, fn in audit.items():

@@ -25,7 +25,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.1"
 PROBE_DIR = "/tmp/scale_probe"
@@ -127,10 +127,6 @@ PROBE_QUERIES = [
     ("q194_staged_bpebatch", "STAGED r13 (now queries/ablock.py): batched BPE — one corpus token-count shuffle, then n_rounds vocab-frame pair counts with ONE m-row collect each (k/m driver round-trips, the q190 shape batched)"),
     ("q195_staged_bitlsh", "STAGED r14 (now queries/ablock.py): hyperplane bit-LSH top-k — one narrow signature projection (B aggregate HOFs, JVM codegen, no shuffle), candidate generation scans n_queries x n SIGNATURE bigints through a per-query top-C window, only n_queries x C rows rejoin full vectors"),
     ("q196_staged_entropy", "STAGED r14 (now queries/ablock.py): char-entropy quality screen — one (doc, char) explode linear in corpus bytes + one map-side-collapsing (doc, char) count shuffle (<= |alphabet| rows per doc out) + one doc-keyed agg"),
-    ("q197_staged_ccbigstar", "STAGED r15 (r18 cohort): large-star/small-star connected components — two keyed self-groupings of a SHRINKING edge frame per round, O(log d) rounds vs min-label's diameter; per-round lineage cuts; 16x data grows the edge frame, not the round count"),
-    ("q198_staged_substrdup", "STAGED r15 (r18 cohort): winnowed substring dedup — gram explode linear in corpus chars + ONE w-row ordered window pass per doc; downstream runs on the ~2/(w+1)-selected fingerprint frame with max_df-bounded pair fan-out"),
-    ("q199_staged_topkzipf", "STAGED r15 (r18 cohort): Zipf-aware certified top-k — one (group,bucket,item) token-count shuffle + per-bucket total/rank windows; kept rows <= theta+1 per bucket, merge/read run on the rollup frame"),
-    ("q200_staged_labelagree", "STAGED r15 (r18 cohort): label aggregation + chance-corrected agreement — one (item,rater) dedup window + one (item,label) count shuffle; summary terms are label-domain-sized, nothing pairwise materialized"),
 ]
 
 
@@ -188,7 +184,7 @@ def replicate(mult: int) -> str:
                 # k-grams inside long words identical across copies:
                 # their doc-frequency then grew 16x, tripping q124's
                 # heavy-hitter suppression and deflating its legitimate
-                # pair structure — see probe_q124_terms.py.)
+                # pair structure — finding 6 below.)
                 # Pure rotation admits at most 26 pairwise-distinct
                 # letter maps: at i % 26 == 0 the map is the identity
                 # and verbatim duplicates (the 109x artifact) silently
@@ -271,16 +267,12 @@ def _custom_probes():
 
     from live_market_data_orderflow_analysis_big_data_project__spark.queries import (  # noqa: E501
         ablock,
-        staging,
     )
 
     return {
-        # staged next-rotation entries: probed BEFORE they enter the
-        # window, same as their oracle parity.  The r9 rotation moved
-        # most of these into queries/ablock.py — probe KEYS keep their
-        # original "_staged_" names so finding-13 numbers stay
-        # comparable across rounds (the label records where the probe
-        # was born, not where the entry lives now)
+        # probe KEYS keep their original "_staged_" names so the
+        # finding-13+ numbers in docs/SCALING.md stay comparable; the
+        # entries themselves live in queries/ablock.py
         "q142_staged_hist_report": (
             None,
             lambda spark, sf, ctx: ablock.q142_hist_rollup_report(spark, sf),
@@ -413,22 +405,6 @@ def _custom_probes():
         "q196_staged_entropy": (
             None,
             lambda spark, sf, ctx: ablock.q196_char_entropy(spark, sf),
-        ),
-        "q197_staged_ccbigstar": (
-            None,
-            lambda spark, sf, ctx: staging.q197_cc_bigstar(spark, sf),
-        ),
-        "q198_staged_substrdup": (
-            None,
-            lambda spark, sf, ctx: staging.q198_substring_dups(spark, sf),
-        ),
-        "q199_staged_topkzipf": (
-            None,
-            lambda spark, sf, ctx: staging.q199_topk_zipf(spark, sf),
-        ),
-        "q200_staged_labelagree": (
-            None,
-            lambda spark, sf, ctx: staging.q200_label_agreement(spark, sf),
         ),
         "q147_staged_pps": (
             None,
@@ -674,7 +650,7 @@ def main() -> None:
         "   coalesce.",
         "",
         "6. q124's r5 wall ratio (11.3, the table's outlier) DECOMPOSES to",
-        "   linear terms (tools/probe_q124_terms.py): at 16x data every",
+        "   linear terms (per-stage cardinalities): at 16x data every",
         "   distributed cardinality is <= ~17x (n_sel 17.4x; drop-list,",
         "   kept rows, pair fan-out, output all bounded), i.e. no",
         "   super-linear term exists — the wall is the mod-p selection map",
@@ -689,7 +665,7 @@ def main() -> None:
         "   in finding 2.",
         "",
         "7. q91b's wall ratio (4.2 at 16x) DECOMPOSES to all-linear terms",
-        "   (tools/probe_q91b_terms.py): every stage cardinality lands at",
+        "   (per-stage cardinalities): every stage cardinality lands at",
         "   15.8-16.1x, max_bucket constant at 22 docs — the wall ratio",
         "   sits under the factor only because the 1x run is",
         "   fixed-overhead-dominated.  Growth knob: band_rows (wider bands",
@@ -713,7 +689,7 @@ def main() -> None:
         "   since round 5 (BENCH_full.json `query_samples`).",
         "",
         "10. q111's r7 BENCH regression (1.80 -> 2.57 s at sf0.1, 16x ratio",
-        "    still 1.0) decomposed per-stage (tools/probe_q111_terms.py): the",
+        "    still 1.0) decomposed per-stage (per-stage cardinalities): the",
         "    CC loop was ~1.2 s of the wall — 2 rounds x (label-update",
         "    checkpoint ~0.4 s + a SECOND old-vs-new join ~0.2 s for the",
         "    convergence count).  Round 8 fused the change flag into the",
@@ -723,7 +699,7 @@ def main() -> None:
         "    pipeline (md5 star join + q91's jaccard verify), not the loop.",
         "",
         "11. q121_semdedup's 16x ratio (2.4) is the SemDeDup cap TRANSITION,",
-        "    not a defect (tools/probe_q121_terms.py): in-stripe pairs =",
+        "    not a defect (per-stage cardinalities): in-stripe pairs =",
         "    n_vecs x min(|cluster|, max_cluster)/2.  At 1x the fixture's",
         "    largest cluster is 218 — UNDER the 512 cap, ~100 comparisons/vec",
         "    — while at 16x the cap binds (~250/vec ceiling): pairs grow 40x",
@@ -964,7 +940,7 @@ def main() -> None:
         "    join (den*Lmin >= num*Lmax, lossless) and carried set sizes",
         "    through the prefix postings (two post-verify joins deleted):",
         "    re-probed 11.0 -> 53.8 s (4.9x).",
-        "    TERM DECOMPOSITION (tools/probe_q174_terms.py, post-filter):",
+        "    TERM DECOMPOSITION (per-stage cardinalities, post-filter):",
         "    every stage is EXACTLY 16.0x — elements 260k -> 4.17M, prefix",
         "    rows 81k -> 1.29M, prefix-join pool 202k -> 3.24M, candidates",
         "    AFTER the length filter 105k -> 1.67M (the filter halves the",
@@ -1098,7 +1074,12 @@ def main() -> None:
         "Regenerate: `python tools/scale_probe.py`.",
         "",
     ]
-    with open("/root/repo/docs/SCALING.md", "w") as f:
+    out = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "docs",
+        "SCALING.md",
+    )
+    with open(out, "w") as f:
         f.write("\n".join(lines))
     print("wrote docs/SCALING.md")
 
