@@ -25,19 +25,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Scratch on the fastest local medium (r16): the streaming entries
-    # create their checkpoint/sink dirs with tempfile.mkdtemp, which
-    # honors $TMPDIR — align it with the engine session's scratch
-    # (session.py routes spark.local.dir/java.io.tmpdir the same way)
-    # so checkpoint fsyncs never ride the shared /tmp block device.
+    # The streaming entries create their checkpoint/sink dirs with
+    # tempfile.mkdtemp, which honors $TMPDIR: point it at the engine
+    # session's scratch (session.scratch_dir, the same directory as
+    # spark.local.dir/java.io.tmpdir) so the per-micro-batch checkpoint
+    # file creates and renames stay off the shared /tmp block device.
     # Pre-set TMPDIR or SPARK_GRAFT_SCRATCH="" disables.
-    if "TMPDIR" not in os.environ and os.environ.get(
-        "SPARK_GRAFT_SCRATCH", "/dev/shm"
-    ) and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        _scratch = os.environ.get(
-            "SPARK_GRAFT_SCRATCH"
-        ) or "/dev/shm/spark_graft_local"
-        os.makedirs(_scratch, exist_ok=True)
+    from live_market_data_orderflow_analysis_big_data_project__spark.session import (
+        default_master,
+        scratch_dir,
+    )
+
+    _scratch = None if "TMPDIR" in os.environ else scratch_dir(default_master())
+    if _scratch:
         os.environ["TMPDIR"] = _scratch
         import tempfile as _tempfile
 

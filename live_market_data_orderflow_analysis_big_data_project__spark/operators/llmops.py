@@ -25,6 +25,13 @@ Scale design (the 100 TB contract for each operator):
 
 from __future__ import annotations
 
+# pyspark.ml is imported here, not inside the functions that use it: the
+# recall families of one query run those functions on worker threads at
+# the same moment, and concurrent first imports of pyspark.ml can see a
+# partially initialized module.
+from pyspark.ml.clustering import KMeans
+from pyspark.ml.feature import BucketedRandomProjectionLSH
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -377,8 +384,6 @@ def knn_join_lsh(
     candidates per left id by L2 distance.  Approximate (bucketing may miss
     true neighbors), hence rows-only in the correctness gate.
     """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
 
     feats = df.select(
         F.col(id_col).alias("doc"),
@@ -704,8 +709,6 @@ def ann_ivf(
     ``n_probe=n_clusters`` degenerates to exact brute force.
     """
     import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
     feats = df.select(
         F.col(id_col),
