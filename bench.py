@@ -83,6 +83,11 @@ def main() -> None:
     import shutil as _sh
     import tempfile as _tf
 
+    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (  # noqa: E501
+        drain as _drain,
+        run_paced_to_memory as _paced,
+    )
+
     _warm_ckpt = _tf.mkdtemp(prefix="bench_warm_ckpt_")
     _wq = (
         spark.readStream.format("rate").option("rowsPerSecond", "1").load()
@@ -91,11 +96,9 @@ def main() -> None:
         .trigger(availableNow=True)
         .start()
     )
-    # awaitTermination returns False on timeout with the query still
-    # RUNNING — it would then compete with the timed samples below; stop
-    # it explicitly before entering the timed loop.
-    if not _wq.awaitTermination(60):
-        _wq.stop()
+    # A warm stream still running after 60 s would compete with the
+    # timed samples below: drain stops it and fails the bench.
+    _drain(_wq, 60)
     _sh.rmtree(_warm_ckpt, ignore_errors=True)
     # ...and the Python streaming DataSource path (s11 is single-sample at
     # suite position 2: its first-in-session run was measured at ~3x its
@@ -103,9 +106,6 @@ def main() -> None:
     # reader workers, which the JVM rate source above does not touch).
     from live_market_data_orderflow_analysis_big_data_project__spark.sources.pydatasource import (  # noqa: E501
         register as _register_pyds,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (  # noqa: E501
-        run_paced_to_memory as _paced,
     )
 
     _register_pyds(spark)

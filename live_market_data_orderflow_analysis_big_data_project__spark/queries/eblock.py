@@ -29,6 +29,7 @@ from ..operators.asof import asof_join
 from ..operators.candles import rollup_ohlc
 from ..operators.funnel import funnel_stages
 from ..operators.warehouse import scd2_merge
+from ..session import run_concurrent
 from ..sources.bucketed import read_bucketed, write_bucketed
 from ..sources.tables import load_table, register_views
 
@@ -1619,41 +1620,28 @@ def q132_write_tables(spark, sf) -> tuple[str, str]:
     li = _t(spark, sf, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
-    # r16: the two bucketed writes are independent blocking jobs — run
-    # them concurrently (guide §2.6, the q136/ivf_pq submit +
-    # FIRST_EXCEPTION shape) so the smaller write rides the larger
-    # one's scheduling tail instead of serializing after it.
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                write_bucketed,
-                o,
-                orders_tbl,
-                ("o_orderkey",),
-                32,
-                path=os.path.join(root, "q132_orders"),
-                sort_cols=("o_orderkey",),
-            ),
-            pool.submit(
-                write_bucketed,
-                li,
-                lineitem_tbl,
-                ("l_orderkey",),
-                32,
-                path=os.path.join(root, "q132_lineitem"),
-                sort_cols=("l_orderkey",),
-            ),
-        ]
-        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
-        failed = next((f for f in done if f.exception() is not None), None)
-        if failed is not None:
-            for f in futs:
-                f.cancel()
-            raise failed.exception()
-        for f in futs:
-            f.result()
+    # The two bucketed writes are independent blocking jobs: run them
+    # concurrently so the smaller write rides the larger one's
+    # scheduling tail instead of serializing after it.
+    run_concurrent(
+        spark,
+        lambda: write_bucketed(
+            o,
+            orders_tbl,
+            ("o_orderkey",),
+            32,
+            path=os.path.join(root, "q132_orders"),
+            sort_cols=("o_orderkey",),
+        ),
+        lambda: write_bucketed(
+            li,
+            lineitem_tbl,
+            ("l_orderkey",),
+            32,
+            path=os.path.join(root, "q132_lineitem"),
+            sort_cols=("l_orderkey",),
+        ),
+    )
     _register_bucket_cleanup(spark, root, (orders_tbl, lineitem_tbl))
     return orders_tbl, lineitem_tbl
 

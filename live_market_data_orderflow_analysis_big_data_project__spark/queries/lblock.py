@@ -45,6 +45,7 @@ from ..operators.llmops import (
     tokens_col,
 )
 from ..operators.multimodal import extract_features, sample_frames, with_payload
+from ..session import run_concurrent
 from ..sources.tables import load_table
 
 # DuckDB twin of operators/llmops.py::tokens_col
@@ -761,25 +762,11 @@ def q136_ann_recall_gate(spark, sf):
         )
 
     # The three families are independent blocking collects — run them
-    # as concurrent Spark jobs (the q191/ivf concurrent-submission
-    # pattern: submit + wait(FIRST_EXCEPTION) so a failing family
-    # surfaces immediately and queued siblings are cancelled).  Rows
-    # assemble in paths order, so the output is order-deterministic
-    # regardless of which family finishes first.
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
+    # as concurrent Spark jobs; a failing family cancels its siblings'
+    # jobs.  Rows come back in paths order, so the output is
+    # order-deterministic regardless of which family finishes first.
     paths = ("q91b_vs_q91", "q92b_vs_q92", "q93b_vs_q93")
-    with ThreadPoolExecutor(max_workers=len(paths)) as pool:
-        futs = {p: pool.submit(_family, p) for p in paths}
-        done, _ = wait(list(futs.values()), return_when=FIRST_EXCEPTION)
-        failed = next(
-            (f for f in done if f.exception() is not None), None
-        )
-        if failed is not None:
-            for f in futs.values():
-                f.cancel()
-            raise failed.exception()
-        rows = [futs[p].result() for p in paths]
+    rows = run_concurrent(spark, *(lambda p=p: _family(p) for p in paths))
     return spark.createDataFrame(
         rows, "path string, n_exact long, recall_ok boolean"
     )

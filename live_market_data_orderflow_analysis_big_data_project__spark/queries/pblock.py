@@ -55,6 +55,7 @@ from ..operators.pipeline import (
     stratified_sample,
     unigram_nll_score,
 )
+from ..session import run_concurrent
 from ..sources.compact import compact_partitioned
 from ..sources.sinks import write_partitioned_parquet
 from ..sources.formats import (
@@ -1112,36 +1113,15 @@ def q140_zorder_layout(spark, sf):
     )
     zpath = _roundtrip_path("q140_zorder")
     lpath = _roundtrip_path("q140_linear")
-    # r16: the two layout writes are independent blocking jobs — run
-    # them concurrently (guide §2.6, the q136/q132 submit +
-    # FIRST_EXCEPTION shape).
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                write_layout,
-                zorder_file_assign(
-                    li, "l_partkey", "l_suppkey", **_Z140
-                ).select(*_Z140_COLS),
-                zpath,
-            ),
-            pool.submit(
-                write_layout,
-                linear_file_assign(
-                    li, "l_partkey", "l_suppkey", **_Z140
-                ).select(*_Z140_COLS),
-                lpath,
-            ),
-        ]
-        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
-        failed = next((f for f in done if f.exception() is not None), None)
-        if failed is not None:
-            for f in futs:
-                f.cancel()
-            raise failed.exception()
-        for f in futs:
-            f.result()
+    # The two layout writes are independent blocking jobs: run them
+    # concurrently.
+    z = zorder_file_assign(li, "l_partkey", "l_suppkey", **_Z140)
+    lin = linear_file_assign(li, "l_partkey", "l_suppkey", **_Z140)
+    run_concurrent(
+        spark,
+        lambda: write_layout(z.select(*_Z140_COLS), zpath),
+        lambda: write_layout(lin.select(*_Z140_COLS), lpath),
+    )
     back = (
         spark.read.parquet(zpath)
         .withColumn("layout", F.lit("zorder"))
@@ -1274,35 +1254,14 @@ def q140b_zorder_rank_tiles(spark, sf):
     )
     vpath = _roundtrip_path("q140b_value")
     rpath = _roundtrip_path("q140b_rank")
-    # r16: independent layout writes run concurrently (guide §2.6, the
-    # q140 shape).
-    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                write_layout,
-                zorder_file_assign(
-                    ev, "v_cents", "user_id", **_Z140B
-                ).select(*_Z140B_COLS),
-                vpath,
-            ),
-            pool.submit(
-                write_layout,
-                rank_zorder_file_assign(
-                    ev, "v_cents", "user_id", **_Z140B
-                ).select(*_Z140B_COLS),
-                rpath,
-            ),
-        ]
-        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
-        failed = next((f for f in done if f.exception() is not None), None)
-        if failed is not None:
-            for f in futs:
-                f.cancel()
-            raise failed.exception()
-        for f in futs:
-            f.result()
+    # Independent layout writes run concurrently (the q140 shape).
+    val = zorder_file_assign(ev, "v_cents", "user_id", **_Z140B)
+    rank = rank_zorder_file_assign(ev, "v_cents", "user_id", **_Z140B)
+    run_concurrent(
+        spark,
+        lambda: write_layout(val.select(*_Z140B_COLS), vpath),
+        lambda: write_layout(rank.select(*_Z140B_COLS), rpath),
+    )
     back = (
         spark.read.parquet(vpath)
         .withColumn("layout", F.lit("value"))

@@ -116,6 +116,49 @@ def get_spark(
     return ensure_engine_confs(spark)
 
 
+def run_concurrent(spark: SparkSession, *fns) -> list:
+    """Run independent blocking Spark work concurrently; return the
+    results in argument order.
+
+    Spark job submission is thread-safe, so the scheduler interleaves
+    the workers' jobs.  Each worker inherits the caller's local
+    properties and tags its jobs with one tag unique to this call.  On
+    the first failure every sibling's jobs are cancelled by that tag,
+    repeatedly until all siblings have finished (a sibling may submit
+    its job only after the first cancel), and the original exception
+    is raised, not a sibling's cancellation error."""
+    import uuid
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    from pyspark.util import inheritable_thread_target
+
+    sc = spark.sparkContext
+    tag = f"run_concurrent_{uuid.uuid4().hex}"
+
+    def tagged(fn):
+        # one wrap per worker: each gets its own copy of the properties
+        @inheritable_thread_target(spark)
+        def run():
+            sc.addJobTag(tag)
+            try:
+                return fn()
+            finally:
+                sc.removeJobTag(tag)
+
+        return run
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [pool.submit(tagged(fn)) for fn in fns]
+        done, pending = wait(futs, return_when=FIRST_EXCEPTION)
+        failed = next((f for f in futs if f in done and f.exception()), None)
+        if failed is None:
+            return [f.result() for f in futs]
+        while pending:
+            sc.cancelJobsWithTag(tag)
+            _, pending = wait(pending, timeout=0.5)
+        raise failed.exception()
+
+
 def default_master() -> str:
     """$SPARK_MASTER_URL, else local[$SPARK_GRAFT_CPUS] (default 32)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -174,6 +174,9 @@ def run_to_memory(
     advances the watermark, runs the final no-data batch that flushes
     closed windows, then terminates — which is what makes streaming
     queries expressible under the driver's batch ``queries()`` contract.
+    A query still running after ``timeout_s`` is stopped and raises
+    ``TimeoutError`` (see :func:`drain`) instead of returning a partial
+    table.
     """
     qname = f"{name}_{next(_qid)}"
     spark = sdf.sparkSession
@@ -185,8 +188,23 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_s)
+        drain(q, timeout_s)
     return spark.table(qname)
+
+
+def drain(q, timeout_s: float) -> None:
+    """Wait for a terminating (AvailableNow) query to finish.
+
+    A failed query raises its StreamingQueryException.  A query still
+    running after ``timeout_s`` is stopped and raises ``TimeoutError``:
+    its sink holds only the batches committed so far, and left running
+    it would compete with whatever runs next."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not finish within {timeout_s}s; "
+            "stopped"
+        )
 
 
 def run_paced_to_memory(

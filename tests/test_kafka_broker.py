@@ -69,6 +69,7 @@ def test_produce_readstream_sink_roundtrip(kafka_spark):
         TICK_SCHEMA,
     )
     from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (  # noqa: E501
+        drain,
         kafka_sink,
         kafka_source,
         serialize_json,
@@ -102,7 +103,7 @@ def test_produce_readstream_sink_roundtrip(kafka_spark):
     q = kafka_sink(parsed, BOOTSTRAP, topic_out, ckpt).trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    drain(q, 120)
 
     back = (
         spark.read.format("kafka")

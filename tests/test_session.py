@@ -1,18 +1,20 @@
-"""Session plumbing: the tests import this checkout's package, and the
+"""Session plumbing: the tests import this checkout's package, the
 local scratch and checkpoint-manager defaults never reach a non-local
-master."""
+master, and a failing concurrent family cancels its siblings' jobs."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
 import live_market_data_orderflow_analysis_big_data_project__spark as pkg
 from live_market_data_orderflow_analysis_big_data_project__spark.session import (  # noqa: E501
     _session_confs,
+    run_concurrent,
     scratch_dir,
 )
 
@@ -122,3 +124,72 @@ def test_llmops_imports_pyspark_ml_eagerly():
         text=True, check=True, timeout=120,
     )
     assert out.stdout.split() == ["True", "True"]
+
+
+def test_run_concurrent_order_tags_and_properties(spark):
+    sc = spark.sparkContext
+    before = set(sc.getJobTags())
+
+    def probe(i):
+        time.sleep(0.2 * (3 - i))  # finish in reverse order
+        props = sc.getLocalProperty("spark.test.caller")
+        return i, set(sc.getJobTags()), props
+
+    sc.setLocalProperty("spark.test.caller", "yes")
+    try:
+        out = run_concurrent(spark, *(lambda i=i: probe(i) for i in range(3)))
+    finally:
+        sc.setLocalProperty("spark.test.caller", None)
+    assert [i for i, _, _ in out] == [0, 1, 2]
+    added = {frozenset(tags - before) for _, tags, _ in out}
+    assert len(added) == 1 and len(next(iter(added))) == 1
+    assert all(prop == "yes" for _, _, prop in out)
+    assert set(sc.getJobTags()) == before
+
+
+def _sleeping_job(spark, seconds):
+    def slow(batches):
+        import time
+
+        time.sleep(seconds)
+        yield from batches
+
+    return spark.range(1, numPartitions=1).mapInPandas(slow, "id long").collect()
+
+
+def _active_jobs(spark, settle_s=10.0):
+    """Active job ids, once the listener bus has caught up."""
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + settle_s
+    while tracker.getActiveJobsIds() and time.time() < deadline:
+        time.sleep(0.1)
+    return tracker.getActiveJobsIds()
+
+
+@pytest.mark.parametrize("sibling_starts_first", [True, False])
+def test_run_concurrent_failure_cancels_sibling_jobs(
+    spark, sibling_starts_first
+):
+    """The sibling's 60 s job is cancelled whether it was already running
+    when the family failed or was submitted after the failure."""
+    tracker = spark.sparkContext.statusTracker()
+    assert not _active_jobs(spark)
+
+    def sibling():
+        if not sibling_starts_first:
+            time.sleep(2)  # Python work first: the failure comes before the job
+        return _sleeping_job(spark, 60)
+
+    def failing():
+        if sibling_starts_first:
+            deadline = time.time() + 30
+            while not tracker.getActiveJobsIds() and time.time() < deadline:
+                time.sleep(0.05)
+            assert tracker.getActiveJobsIds(), "sibling job never started"
+        raise ValueError("family failed")
+
+    t0 = time.time()
+    with pytest.raises(ValueError, match="family failed"):
+        run_concurrent(spark, sibling, failing)
+    assert time.time() - t0 < 30
+    assert not _active_jobs(spark)

@@ -52,6 +52,7 @@ def test_csv_export_single_file(spark):
 
 def test_foreach_batch_sorted_sink(spark):
     from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
+        drain,
         foreach_batch_sink,
         sorted_parquet_batch_writer,
         stream_events,
@@ -64,7 +65,7 @@ def test_foreach_batch_sorted_sink(spark):
     q = foreach_batch_sink(
         s, sorted_parquet_batch_writer(out, ("ts", "event_id")), ckpt
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     back = spark.read.parquet(out)
     assert back.count() == load_table(spark, SF0001, "events").count()
     # restart from the same checkpoint: no new batches, no duplicates
@@ -73,19 +74,20 @@ def test_foreach_batch_sorted_sink(spark):
         sorted_parquet_batch_writer(out, ("ts", "event_id")),
         ckpt,
     )
-    q2.awaitTermination(120)
+    drain(q2, 120)
     assert spark.read.parquet(out).count() == back.count()
 
 
 def test_console_sink_runs(spark):
     from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
         console_sink,
+        drain,
         stream_events,
     )
 
     s = stream_events(spark, SF0001).select("event_id", "event_type")
     q = console_sink(s, num_rows=3)
-    q.awaitTermination(120)
+    drain(q, 120)
     assert q.lastProgress is not None
 
 

@@ -16,6 +16,7 @@ from live_market_data_orderflow_analysis_big_data_project__spark.operators.candl
 )
 from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
     dedup_within_watermark,
+    drain,
     run_to_memory,
     session_counts,
     stream_events,
@@ -103,7 +104,7 @@ def test_late_data_dropped_across_restart(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120)
         return sum(
             (so.get("numRowsDroppedByWatermark") or 0)
             for p in q.recentProgress
@@ -233,7 +234,7 @@ def test_exactly_once_sink_across_restart(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120)
 
     b1.coalesce(1).write.mode("append").parquet(src)
     run_once()
@@ -313,7 +314,7 @@ def test_multiresolution_candle_pipeline(spark):
     q = foreach_batch_sink(
         candles, sorted_parquet_batch_writer(minute_dir, ("window_start",)), ckpt
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     # batch leg: roll stored minute candles up to hourly
     rolled = rollup_ohlc(
@@ -372,7 +373,7 @@ def test_kafka_wire_roundtrip_byte_for_byte(spark):
     base = tempfile.mkdtemp(prefix="t_kwire_")
     out, ckpt = (os.path.join(base, d) for d in ("out", "ckpt"))
     q = kafka_sink_capture(candle_stream(), out, ckpt, key_col="instrument")
-    q.awaitTermination(120)
+    drain(q, 120)
 
     wire = spark.read.parquet(out)
     # the frame is exactly what writeStream.format("kafka") consumes:
@@ -416,7 +417,7 @@ def test_kafka_shaped_sink_exactly_once_restart(spark):
     def run_once():
         sdf = spark.readStream.schema(b1.schema).parquet(src)
         q = kafka_sink_capture(sdf, out, ckpt, key_col="event_id")
-        q.awaitTermination(120)
+        drain(q, 120)
 
     b1.coalesce(1).write.mode("append").parquet(src)
     run_once()
@@ -736,3 +737,17 @@ def test_quantile_histogram_stream_spans_micro_batches(spark):
         ("t1", "2024-01-01", 3): 1,
     }
     assert one == want                          # split day exact, open day withheld
+
+
+def test_drain_timeout_stops_and_raises(spark):
+    """A stream still running at the timeout is stopped and raises,
+    instead of leaving a partial sink and a live query behind."""
+    q = (
+        spark.readStream.format("rate").load()
+        .writeStream.format("memory").queryName("drain_never_ends")
+        .start()
+    )
+    with pytest.raises(TimeoutError, match="drain_never_ends"):
+        drain(q, 1)
+    assert not q.isActive
+    assert spark.streams.active == []

@@ -79,6 +79,7 @@ def test_scd2_foreachbatch_apply_equals_batch_merge(spark):
     import tempfile
 
     from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
+        drain,
         foreach_batch_sink,
         stream_events_dir,
     )
@@ -113,9 +114,7 @@ def test_scd2_foreachbatch_apply_equals_batch_merge(spark):
         apply_batch,
         os.path.join(base, "ckpt"),
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise AssertionError("availableNow drain timed out")
+    drain(q, 120)
     assert len(batches) >= 2, "updates must span multiple micro-batches"
 
     got = spark.read.parquet(outpath).collect()

@@ -55,6 +55,9 @@ def stress(sf_dir: str, mult: int, n_chunks: int) -> None:
     from live_market_data_orderflow_analysis_big_data_project__spark.sources.tables import (
         load_table,
     )
+    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
+        drain,
+    )
 
     spark = get_spark(
         "stream-stress",
@@ -118,9 +121,7 @@ def stress(sf_dir: str, mult: int, n_chunks: int) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(1800):
-        q.stop()
-        raise RuntimeError("availableNow drain timed out after 1800s")
+    drain(q, 1800)
     wall = time.time() - t0
 
     progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
@@ -206,6 +207,10 @@ def main() -> None:
     from live_market_data_orderflow_analysis_big_data_project__spark.sources.tables import (
         load_table,
     )
+    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
+        drain,
+        kafka_sink_capture,
+    )
 
     spark = get_spark(
         "stream-bench",
@@ -250,9 +255,7 @@ def main() -> None:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("availableNow drain timed out after 600s")
+        drain(q, 600)
         wall = time.time() - t0
         progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
         return wall, sorted(
@@ -279,10 +282,6 @@ def main() -> None:
     # the exact (key, value) frame the Kafka writer would get, through the
     # checkpointed idempotent foreachBatch sink.  This measures the
     # serialize+sink cost the parquet-path number leaves out.
-    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
-        kafka_sink_capture,
-    )
-
     wire_out = tempfile.mkdtemp(prefix="streambench_wire_")
     wire_ck = tempfile.mkdtemp(prefix="streambench_wireck_")
     ticks2 = (
@@ -304,9 +303,7 @@ def main() -> None:
     q2 = kafka_sink_capture(
         candles2, wire_out, wire_ck, key_col="instrument"
     )
-    if not q2.awaitTermination(600):
-        q2.stop()
-        raise RuntimeError("availableNow drain timed out after 600s")
+    drain(q2, 600)
     kafka_wall = time.time() - t1
 
     print(

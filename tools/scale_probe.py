@@ -1048,6 +1048,19 @@ def main() -> None:
         "    baseline broadcasts run on the domain-bounded (type x day)",
         "    frame.",
         "",
+        "18. q193/q194, probed when they were added:",
+        "    q193_staged_ivfpq 13.2 -> 13.7 s (1.0x): the coarse chain plus",
+        "    the four PQ sub-chains are all broadcast-assign scans +",
+        "    (cluster, dim) update shuffles whose per-iteration",
+        "    checkpoint/broadcast mechanics dominate the corpus-linear scan",
+        "    term at these sizes; the search side touches only the codes",
+        "    frame restricted by the n_queries*nprobe probed-list broadcast.",
+        "    q194_staged_bpebatch 8.0 -> 7.7 s (1.0x): the q190 cost model",
+        "    at half the driver round-trips — one corpus token-count",
+        "    shuffle, then vocab-frame rounds (the 16x replica grows the",
+        "    vocab too, and the loop still lands flat: round fixed costs",
+        "    dominate at fixture scale).",
+        "",
         "Caveats: absolute seconds vary (up to ~3x run-to-run) with external",
         "host load — the r9 regeneration itself recorded q106 at \"4.2x\" and",
         "q91b at \"6.0x\" mid-run; both re-measured immediately after at 1.8x",
