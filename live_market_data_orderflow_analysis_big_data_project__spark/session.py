@@ -12,7 +12,14 @@ is (re)applied there before any table is read.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -56,10 +63,8 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
 
     Correctness-critical confs are verified by reading them back; a mismatch
     raises instead of letting every events-table query return
-    wrong-but-plausible results (round-1 advisory, session.py hygiene).
+    wrong-but-plausible results.
     """
-    import warnings
-
     for k, v in ENGINE_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -191,6 +196,48 @@ def scratch_dir(master: str) -> str | None:
     return scratch
 
 
+_NIO_FS_SRC = os.path.join(
+    os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+_NIO_FS_CLASS = f"{__package__}.jvm.NioLocalFileSystem"
+
+
+@functools.cache
+def _nio_fs_classes(base: str) -> str | None:
+    """NioLocalFileSystem compiled against pyspark's Hadoop jar, in a
+    directory under ``base`` keyed by the source and the jar's name (so
+    a build is reused) and renamed into place whole (so a concurrent
+    session never sees half of one); None, with one warning, without
+    `javac` or when the compile fails."""
+    import pyspark
+
+    jars = glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar"))
+    javac = shutil.which("javac")
+    if not (javac and jars):
+        warnings.warn("no javac: Hadoop's local file system forks a chmod "
+                      "per file", stacklevel=4)
+        return None
+    with open(_NIO_FS_SRC, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(jars[0]).encode())
+    out = os.path.join(base, f"nio-fs-{key.hexdigest()[:16]}")
+    if os.path.isdir(out):
+        return out
+    tmp = tempfile.mkdtemp(prefix=".nio-fs-", dir=base)
+    try:
+        subprocess.run(
+            [javac, "--release", "17", "-cp", jars[0], "-d", tmp, _NIO_FS_SRC],
+            check=True, capture_output=True, timeout=300)
+        os.rename(tmp, out)
+    except (OSError, subprocess.SubprocessError) as exc:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(out):  # else another session renamed first
+            warnings.warn(f"NioLocalFileSystem did not compile ({exc}): "
+                          "Hadoop's local file system forks a chmod per file",
+                          stacklevel=4)
+            return None
+    return out
+
+
 def _session_confs(
     master: str, shuffle_partitions: int, extra_conf: dict[str, str] | None
 ) -> dict[str, str]:
@@ -198,19 +245,20 @@ def _session_confs(
     keys of ``extra_conf`` override the engine defaults."""
     confs = dict(ENGINE_CONFS)
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    # Driver heap (r16, guide §5 "memory layout"): in local[N] mode the
+    # Driver heap (guide §5 "memory layout"): in local[N] mode the
     # driver JVM *is* the executor — all N task threads share its heap,
     # and Spark's default is a bare -Xmx1g.  At N=32 that is ~13 MB of
     # execution memory per concurrent task: every hash aggregate/join
     # build spills, and GC time compounds across a long suite (measured
-    # r16: the same queries run 2-5x slower late-suite under the 1g
-    # heap; full bench 314 s -> 186 s with the heap sized to the task
-    # count).  Size the heap to the local core count (384 MB/task-slot,
-    # floor 2g) capped at 1/4 of host RAM; SPARK_GRAFT_DRIVER_MEM_MB
-    # overrides.  On a real cluster (SPARK_MASTER_URL) executor memory
-    # is the deployment's knob and the driver does no data work, so the
-    # same default is simply a sane driver size there.  Only effective
-    # at JVM launch — a pre-existing session keeps its heap.
+    # on a 32-core host: the same queries run 2-5x slower late-suite
+    # under the 1g heap; full bench 314 s -> 186 s with the heap sized
+    # to the task count).  Size the heap to the local core count
+    # (384 MB/task-slot, floor 2g) capped at 1/4 of host RAM;
+    # SPARK_GRAFT_DRIVER_MEM_MB overrides.  On a real cluster
+    # (SPARK_MASTER_URL) executor memory is the deployment's knob and
+    # the driver does no data work, so the same default is simply a
+    # sane driver size there.  Only effective at JVM launch — a
+    # pre-existing session keeps its heap.
     mem_mb = os.environ.get("SPARK_GRAFT_DRIVER_MEM_MB")
     if mem_mb is None:
         local_cores = 0
@@ -226,7 +274,7 @@ def _session_confs(
             pass
         mem_mb = str(want)
     confs["spark.driver.memory"] = f"{mem_mb}m"
-    # JIT code cache (r16): a long-lived session running hundreds of
+    # JIT code cache: a long-lived session running hundreds of
     # distinct queries generates thousands of Janino/whole-stage-codegen
     # classes; the JVM default ReservedCodeCacheSize (240 MB) fills
     # mid-suite, after which the JIT flushes/stops compiling and hot
@@ -246,27 +294,41 @@ def _session_confs(
     if scratch:
         confs["spark.local.dir"] = scratch
         _jvm_opts += f" -Djava.io.tmpdir={scratch}"
-    # Checkpoint commits on a local master: without libhadoop, Hadoop's
-    # local file system forks a process for each permission change and
-    # link probe.  Spark's default FileContext manager probes the link
-    # status of each rename's source (one forked `readlink`), i.e. per
-    # offsets/commits entry and per state-store delta of every
-    # micro-batch; the FileSystem manager renames with the
-    # same no-overwrite check (exists(dst), then rename) and no probe.
-    # Measured on perfbench tick_feed (4 vCPUs, JFR over one run): 5,612
-    # forked processes -> 1,956, none of them `readlink`; traced trigger
-    # p50 714 -> 523 ms.  A real cluster keeps Spark's default, the one
-    # with an atomic no-overwrite rename on HDFS.
+    # Forked processes per file on a local master.  Without libhadoop,
+    # Hadoop's local file system forks a process for each link probe
+    # and each permission change, and streaming creates and renames
+    # several checkpoint files per micro-batch (offsets and commits
+    # entries, each state-store delta and checksum, their `.crc` files).
+    # Two confs remove the two forks:
+    # - the FileSystem checkpoint manager drops the `readlink` that
+    #   Spark's default FileContext manager forks to probe each rename's
+    #   source; it keeps the no-overwrite check (exists(dst), then
+    #   rename).  JFR over one perfbench tick_feed run (4 vCPUs): 5,612
+    #   forked processes -> 1,956, none of them `readlink`.
+    # - NioLocalFileSystem (jvm/, compiled by _nio_fs_classes) makes the
+    #   `chmod` that create and mkdirs fork for every file and directory
+    #   a system call.  JFR over one untraced tick_feed run (4 vCPUs):
+    #   2,312 `chmod` forks -> 0.  Without `javac` the stock file
+    #   system stays.
+    # A real cluster keeps Spark's default manager, the one with an
+    # atomic no-overwrite rename on HDFS, and Hadoop's own file system.
+    _ecp_key = "spark.driver.extraClassPath"
     if _is_local(master):
         confs["spark.sql.streaming.checkpointFileManagerClass"] = (
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager"
         )
+        classes = _nio_fs_classes(scratch or tempfile.gettempdir())
+        if classes:
+            confs[_ecp_key] = classes
+            confs["spark.hadoop.fs.file.impl"] = _NIO_FS_CLASS
     _ejo_key = "spark.driver.extraJavaOptions"
     confs[_ejo_key] = _jvm_opts
     confs["spark.ui.enabled"] = "false"
     extra_conf = dict(extra_conf or {})
     if _ejo_key in extra_conf:
         extra_conf[_ejo_key] = f"{extra_conf[_ejo_key]} {_jvm_opts}"
+    if _ecp_key in confs and _ecp_key in extra_conf:
+        extra_conf[_ecp_key] += os.pathsep + confs[_ecp_key]
     confs.update(extra_conf)
     return confs
