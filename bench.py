@@ -48,7 +48,10 @@ def main() -> None:
     # instead of a forensic reconstruction.
     loadavg = [round(x, 2) for x in os.getloadavg()]
     import __spark_entry__ as ent
-    from live_market_data_orderflow_analysis_big_data_project__spark import get_spark
+    from live_market_data_orderflow_analysis_big_data_project__spark.session import (
+        get_spark,
+        query_scope,
+    )
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -140,17 +143,18 @@ def main() -> None:
         reps = n_s_samples if key.startswith("s") else n_samples
         runs: list[float] = []
         try:
-            for _ in range(reps):
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.time() - t0, 3))
-                # Queries that persist() a diamond dependency (q124's
-                # selection stage) would otherwise have samples 2/3
-                # served from the CacheManager (identical analyzed plan
-                # => cache substitution), turning the median into a
-                # warm-cache read instead of the operator's cost.
-                spark.catalog.clearCache()
+            with query_scope(spark, key):
+                for _ in range(reps):
+                    t0 = time.time()
+                    df = fn(spark, sf_dir)
+                    df.write.format("noop").mode("overwrite").save()
+                    runs.append(round(time.time() - t0, 3))
+                    # Queries that persist() a diamond dependency (q124's
+                    # selection stage) would otherwise have samples 2/3
+                    # served from the CacheManager (identical analyzed plan
+                    # => cache substitution), turning the median into a
+                    # warm-cache read instead of the operator's cost.
+                    spark.catalog.clearCache()
             runs.sort()
             samples[key] = runs
             # lower-middle order statistic: the true median for odd N,

@@ -20,6 +20,7 @@ import shutil
 import subprocess
 import tempfile
 import warnings
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -162,6 +163,20 @@ def run_concurrent(spark: SparkSession, *fns) -> list:
             sc.cancelJobsWithTag(tag)
             _, pending = wait(pending, timeout=0.5)
         raise failed.exception()
+
+
+@contextmanager
+def query_scope(spark: SparkSession, key: str):
+    """Tag every Spark job this thread submits inside the block with
+    ``key`` (one ``queries()`` entry), so its jobs can be attributed or
+    cancelled by entry; ``run_concurrent`` workers started inside
+    inherit the tag."""
+    sc = spark.sparkContext
+    sc.addJobTag(key)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(key)
 
 
 def default_master() -> str:

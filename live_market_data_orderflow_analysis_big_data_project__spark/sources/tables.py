@@ -14,11 +14,20 @@ normalization for the two fixture encodings seen across driver builds:
   after a cached scan, foreign session), we cast it to session-tz TIMESTAMP
   here — a wall-clock no-op under the enforced UTC zone, and the type
   ``withWatermark`` and the DuckDB oracle both expect.
+
+Spark infers a Parquet schema with one job per read.  Entries reload the
+same unchanged fixtures again and again in one session, so each
+session remembers the schema it inferred for a local file, stamped with
+the file's ``(st_mtime_ns, st_size)``, and later loads pass it to the
+reader: no job.  Only the schema is remembered, never the DataFrame:
+every load is a fresh relation (new attribute ids, a fresh file
+listing), so two loads of one table still self-join.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,10 +58,36 @@ def load_table(
     nanoseconds) — the streaming file source needs this schema to read the
     same files before applying its own normalization.
     """
+    # every call: these confs decide what inference returns
     ensure_engine_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if normalize:
         df = normalize_timestamps(df, name)
+    return df
+
+
+# session -> {absolute path: ((st_mtime_ns, st_size), inferred schema)}.
+# Concurrent loads need no lock: each stored schema was inferred after
+# its stamp was taken, so a lost update costs one more inference.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the
+    session's first read of a local file or after its stamp changed."""
+    try:
+        # stat before inferring: a file rewritten in between is stored
+        # under its old stamp, so the next load infers again
+        st = os.stat(path)
+    except OSError:  # not a local file: Spark resolves (or rejects) it
+        return spark.read.parquet(path)
+    key, stamp = os.path.abspath(path), (st.st_mtime_ns, st.st_size)
+    known = _SCHEMAS.setdefault(spark, {})
+    hit = known.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    known[key] = (stamp, df.schema)
     return df
 
 

@@ -42,20 +42,8 @@ def stream_events(
     sf_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source replay of the ``events`` fixture as a streaming frame.
-
-    Streaming twin of sources/tables.py::load_table — same nanosecond
-    normalization, but through ``readStream`` (the file source requires an
-    explicit schema; we take it from the batch reader).
-    """
-    raw_schema = load_table(spark, sf_dir, "events", normalize=False).schema
-    reader = spark.readStream.schema(raw_schema).option(
-        "pathGlobFilter", "events.parquet"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(sf_dir)
-    return _normalize_ts(df)
+    """File-source replay of the ``events`` fixture as a streaming frame."""
+    return stream_table(spark, sf_dir, "events", max_files_per_trigger)
 
 
 def stream_table(
@@ -64,11 +52,13 @@ def stream_table(
     name: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source replay of ANY fixture table as a streaming frame —
-    the generalization of :func:`stream_events` (same
-    schema-from-the-batch-reader convention and ts normalization; the
-    glob pins the single table file so sibling tables in the fixture
-    dir are not picked up)."""
+    """File-source replay of a fixture table as a streaming frame.
+
+    Streaming twin of sources/tables.py::load_table: the file source
+    needs an explicit schema, taken from the batch loader (which
+    remembers it per session), and the same timestamp normalization
+    follows; the glob pins the single table file so sibling tables in
+    the fixture dir are not picked up."""
     raw_schema = load_table(spark, sf_dir, name, normalize=False).schema
     reader = spark.readStream.schema(raw_schema).option(
         "pathGlobFilter", f"{name}.parquet"

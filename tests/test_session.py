@@ -1,7 +1,7 @@
 """Session plumbing: the tests import this checkout's package, the
 local scratch, checkpoint-manager and NIO file system defaults never
-reach a non-local master, and a failing concurrent family cancels its
-siblings' jobs."""
+reach a non-local master, a failing concurrent family cancels its
+siblings' jobs, and a query scope tags its entry's jobs."""
 
 from __future__ import annotations
 
@@ -22,6 +22,7 @@ from live_market_data_orderflow_analysis_big_data_project__spark.session import 
     ENGINE_CONFS,
     _nio_fs_classes,
     _session_confs,
+    query_scope,
     run_concurrent,
     scratch_dir,
 )
@@ -333,6 +334,20 @@ def test_run_concurrent_order_tags_and_properties(spark):
     assert len(added) == 1 and len(next(iter(added))) == 1
     assert all(prop == "yes" for _, _, prop in out)
     assert set(sc.getJobTags()) == before
+
+
+def test_query_scope_tags_the_entry_and_its_workers(spark):
+    sc = spark.sparkContext
+    key = "q00_scope_probe"
+    with query_scope(spark, key):
+        inside = set(sc.getJobTags())
+        (worker,) = run_concurrent(spark, lambda: set(sc.getJobTags()))
+    assert key in inside and key in worker
+    assert key not in sc.getJobTags()
+    with pytest.raises(ValueError):
+        with query_scope(spark, key):
+            raise ValueError("entry failed")
+    assert key not in sc.getJobTags()
 
 
 def _sleeping_job(spark, seconds):

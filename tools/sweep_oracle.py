@@ -294,8 +294,9 @@ def main(argv: list[str]) -> int:
 
     import __spark_entry__ as ent
     from check_oracle import TABLES
-    from live_market_data_orderflow_analysis_big_data_project__spark import (
+    from live_market_data_orderflow_analysis_big_data_project__spark.session import (  # noqa: E501
         get_spark,
+        query_scope,
     )
 
     qs, osql = ent.queries(), ent.oracle_sql()
@@ -326,7 +327,8 @@ def main(argv: list[str]) -> int:
                 )
             t0 = time.time()
             try:
-                ok = _compare_one(spark, con, qs[key], osql[key], sf_dir)
+                with query_scope(spark, key):
+                    ok = _compare_one(spark, con, qs[key], osql[key], sf_dir)
             except Exception as e:  # noqa: BLE001 — record, don't abort sweep
                 print(f"ERR  {key} @ {sf}: {type(e).__name__}: {e}")
                 ok = False
