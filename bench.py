@@ -1,16 +1,25 @@
-"""Benchmark harness: runs every declared query at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs the declared queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {key: sec}, "sf": ...}.
 
-Each query executes through the noop sink (full plan runs, nothing is
-collected to the driver) so timings measure engine execution.
+Usage: python bench.py            # every queries() entry
+       python bench.py q146 s22   # a subset: full names or q/s prefixes
 
-The driver records only the LAST ~2000 characters of stdout (round 2's
-83-entry line overflowed that window and BENCH_r02.json was recorded
-unparseable), so the stdout line uses compact separators and short query
-keys (the unique q/s-number prefix, e.g. ``q91b``); the same payload with
-full query names is written to ``BENCH_full.json`` at the repo root.
+Each query executes through the noop sink (full plan runs, nothing is
+collected to the driver) so timings measure engine execution.  Each
+sample is timed in two parts: build (the entry callable returns its
+DataFrame, including any eager driver-side jobs) and execute (the noop
+write).
+
+The driver records only the LAST ~2000 characters of stdout (an
+83-entry line once overflowed that window and was recorded
+unparseable), so the full-suite stdout line uses compact separators and
+short query keys (the unique q/s-number prefix, e.g. ``q91b``); the
+same payload with full query names and every sample's build/execute
+parts is written to ``BENCH_full.json`` at the repo root.  A subset run
+prints that full record as its line and leaves ``BENCH_full.json``
+alone.
 """
 
 from __future__ import annotations
@@ -22,8 +31,32 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# Median-of-N per query.  A single sample cannot tell a plan regression
+# from suite-position noise: a query moved to the FIRST slot of the run
+# absorbed the residual session cold-start (measured 5.7 / 2.2 / 1.9 /
+# 1.7 s over 4 repeats).  Streaming queries (s01..) get 2 samples: a
+# real regression shows in both while a checkpoint-init hiccup shows in
+# one, and a third sample would add half again to the streaming wall
+# for no further signal on plans the batch twins pin.
+N_SAMPLES = 3
+N_S_SAMPLES = 2
 
-def main() -> None:
+
+def resolve(args: list[str], keys) -> list[str]:
+    """Map each argument (a full entry name or its unique q/s-number
+    prefix, e.g. ``q146``) to its entry name; exit 2 on an unknown or
+    ambiguous one."""
+    out = []
+    for a in args:
+        match = [k for k in keys if k == a or k.split("_", 1)[0] == a]
+        if len(match) != 1:
+            print(f"bench: key {a!r} matches {match}", file=sys.stderr)
+            sys.exit(2)
+        out.append(match[0])
+    return out
+
+
+def main(argv: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # The streaming entries create their checkpoint/sink dirs with
     # tempfile.mkdtemp, which honors $TMPDIR: point it at the engine
@@ -42,12 +75,16 @@ def main() -> None:
         import tempfile as _tempfile
 
         _tempfile.tempdir = None  # re-read TMPDIR on next gettempdir()
-    # host-load provenance: four contamination episodes (r8/r10/r12/r14)
-    # each post-dated a CPU burst on this host; recording the 1/5/15-min
-    # load at bench START makes a contaminated record self-identifying
-    # instead of a forensic reconstruction.
-    loadavg = [round(x, 2) for x in os.getloadavg()]
     import __spark_entry__ as ent
+
+    qmap = ent.queries()
+    if argv:
+        qmap = {k: qmap[k] for k in resolve(argv, qmap)}
+    # host-load provenance: four contaminated records each post-dated a
+    # CPU burst on the host; recording the 1/5/15-min load at bench START
+    # makes a contaminated record self-identifying instead of a forensic
+    # reconstruction.
+    loadavg = [round(x, 2) for x in os.getloadavg()]
     from live_market_data_orderflow_analysis_big_data_project__spark.session import (
         get_spark,
         query_scope,
@@ -79,8 +116,7 @@ def main() -> None:
     spark.range(10_000).groupBy((_F.col("id") % 16).alias("k")).count().write.format(
         "noop"
     ).mode("overwrite").save()
-    # ...and the Structured Streaming machinery: the r6 window reorder
-    # put s11 (single-sample) at suite position 2, so the first streaming
+    # ...and the Structured Streaming machinery: the first streaming
     # query would otherwise absorb the engine's stream-execution init
     # (checkpoint manager, micro-batch thread, state-store provider).
     import shutil as _sh
@@ -103,10 +139,10 @@ def main() -> None:
     # timed samples below: drain stops it and fails the bench.
     _drain(_wq, 60)
     _sh.rmtree(_warm_ckpt, ignore_errors=True)
-    # ...and the Python streaming DataSource path (s11 is single-sample at
-    # suite position 2: its first-in-session run was measured at ~3x its
-    # steady state — the cold cost is the per-partition Python stream-
-    # reader workers, which the JVM rate source above does not touch).
+    # ...and the Python streaming DataSource path (s11's first-in-session
+    # run was measured at ~3x its steady state — the cold cost is the
+    # per-partition Python stream-reader workers, which the JVM rate
+    # source above does not touch).
     from live_market_data_orderflow_analysis_big_data_project__spark.sources.pydatasource import (  # noqa: E501
         register as _register_pyds,
     )
@@ -122,33 +158,25 @@ def main() -> None:
         expected_rows=64,
     )
 
-    # Median-of-N per query (default 3, SPARK_GRAFT_BENCH_SAMPLES to
-    # override).  Round 4's q120 "regression" (1.5 s -> 5.4 s) was pure
-    # suite-position noise: the window reorder made q120 the FIRST query
-    # of the run and the residual session cold-start landed on it
-    # (measured 5.7 / 2.2 / 1.9 / 1.7 s over 4 repeats).  Single samples
-    # cannot distinguish that from a real plan regression; medians can.
-    # Streaming queries (s01..) get 2 samples (SPARK_GRAFT_BENCH_S_SAMPLES
-    # to override): single samples made the r8 s02 "doubling" (1.74 ->
-    # 3.42 s) indistinguishable from drain-startup noise — the r8 verdict
-    # item 3.  Two samples cost ~+40 s suite wall and let a real
-    # regression show up in BOTH while a checkpoint-init hiccup shows in
-    # one; full n_samples repeats would triple the streaming wall for no
-    # further signal on plans the batch twins pin.
-    n_samples = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES", "3"))
-    n_s_samples = int(os.environ.get("SPARK_GRAFT_BENCH_S_SAMPLES", "2"))
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
-    for key, fn in ent.queries().items():
-        reps = n_s_samples if key.startswith("s") else n_samples
+    phases: dict[str, dict[str, list[float]]] = {}
+    for key, fn in qmap.items():
+        reps = N_S_SAMPLES if key.startswith("s") else N_SAMPLES
         runs: list[float] = []
+        parts: dict[str, list[float]] = {"build": [], "execute": []}
+        phases[key] = parts
         try:
             with query_scope(spark, key):
                 for _ in range(reps):
-                    t0 = time.time()
+                    t0 = time.perf_counter()
                     df = fn(spark, sf_dir)
+                    t1 = time.perf_counter()
                     df.write.format("noop").mode("overwrite").save()
-                    runs.append(round(time.time() - t0, 3))
+                    t2 = time.perf_counter()
+                    parts["build"].append(round(t1 - t0, 3))
+                    parts["execute"].append(round(t2 - t1, 3))
+                    runs.append(round(t2 - t0, 3))
                     # Queries that persist() a diamond dependency (q124's
                     # selection stage) would otherwise have samples 2/3
                     # served from the CacheManager (identical analyzed plan
@@ -177,22 +205,26 @@ def main() -> None:
         # silently hide failures: n_failed must be 0 for totals to compare.
         "n_queries": len(timings),
         "n_failed": n_failed,
-        "samples": n_samples,
+        "samples": N_SAMPLES,
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "loadavg_start": loadavg,
     }
+    record = {**payload, "query_samples": samples, "query_phases": phases}
+    if argv:
+        print(json.dumps(record, separators=(",", ":")))
+        spark.stop()
+        return
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_full.json"), "w") as f:
-        json.dump({**payload, "query_samples": samples}, f, indent=1)
+        json.dump(record, f, indent=1)
         f.write("\n")
 
     # Stdout line must fit the driver's ~2000-char tail window: shorten
     # each query key to its unique q/s-number prefix ("q91b_..." -> "q91b")
     # and AUTO-FIT the per-query precision — at 158 entries the 3-decimal
     # line measured 2083 chars, which would truncate the line's HEAD
-    # (metric/value) and record an unparseable BENCH row, the round-2
-    # failure mode.  Full-precision values always live in BENCH_full.json;
+    # (metric/value) and record an unparseable BENCH row.  Full-precision values always live in BENCH_full.json;
     # the stdout line degrades 3 -> 2 -> 1 decimals until it fits.
     short = {k.split("_", 1)[0]: v for k, v in timings.items()}
     assert len(short) == len(timings), "short query keys must stay unique"
@@ -218,4 +250,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -11,7 +11,6 @@ Layout:
     operators/    tick parsing, candles, as-of join, dedup, similarity, text
     functions/    column-expression helpers (hash-stable agg conventions)
     streaming/    S-block streaming builders (watermark/session/state)
-    plans/        physical-plan introspection helpers
     queries/      the declared query contract (queries() + oracle_sql())
 """
 

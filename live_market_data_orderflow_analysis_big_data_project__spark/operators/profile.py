@@ -47,7 +47,8 @@ no round-robin sort, no skew: the combined key space is the row
 space).  At real scale the guard never fires — a multi-row-group
 corpus scan already carries the parallelism — so no extra shuffle is
 paid exactly where it would hurt (measured sf0.1: 3.5 s -> 1.8 s with
-the guard firing; the r16 plan evidence is plans/r16/q157_*).
+the guard firing; q157's plan then opens with one REPARTITION_BY_NUM
+hash exchange on the profiled columns ahead of the expand).
 
 At corpus scale swap ``exact_distinct=False`` for
 approx_count_distinct (HLL, constant-size partials) — that path keeps

@@ -248,12 +248,12 @@ def quantile_report(
             w_val.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_cum"),
     )
-    # r16 plan shape: ALL quantiles read in ONE pass over ``merged``
+    # Plan shape: ALL quantiles read in ONE pass over ``merged``
     # and ONE pass over ``full`` via conditional aggregation.  The
     # former per-quantile (tq, est, exact, at_est) join chain planned
     # a fresh subtree per frame per quantile — each re-deriving
     # hist/summary from scratch — which blew the q180 physical plan up
-    # to 150 Exchange nodes (plans/r16/q180_quantile_rollup_before.txt)
+    # to 58 Exchange nodes (336 operators; 24 and 160 in this form)
     # for two quantiles; the conditional-agg form is 3 joins total and
     # value-identical (min over a conditional ≡ where + groupBy + min;
     # the est-rank error row is unique per group because ``full`` is

@@ -1051,7 +1051,6 @@ def s16_transitions_stream(spark, sf):
         transition_increments(sdf),
         "s16_transitions",
         output_mode="update",
-        n_state_partitions=8,
     )
     # counts_to_matrix derives totals FROM the counts (a self-referencing
     # join); cut lineage on the tiny emitted table — the s15 lesson
@@ -1088,7 +1087,6 @@ def s17_gapfill_stream(spark, sf):
             sdf, ["event_type"], "ts", dsum("value"), F.count(F.lit(1))
         ),
         "s17_gapfill",
-        n_state_partitions=8,
     )
     buckets = buckets.localCheckpoint(eager=True)  # the s15 lineage cut
     out = gapfill_from_buckets(buckets, ["event_type"], bucket="hour")

@@ -87,7 +87,7 @@ def s01_tumbling_candles(spark, sf):
         window="1 minute",
         watermark="5 minutes",
     )
-    out = run_to_memory(candles, "s01_candles", n_state_partitions=8)
+    out = run_to_memory(candles, "s01_candles")
     return out.select(
         _fmt("window_start", "window_start"),
         "instrument",
@@ -105,13 +105,13 @@ def s01_tumbling_candles(spark, sf):
 # --- s02: sliding window aggregation ----------------------------------------
 def s02_sliding_window(spark, sf):
     s = sliding_counts(stream_events(spark, sf))
-    return run_to_memory(s, "s02_sliding", n_state_partitions=8)
+    return run_to_memory(s, "s02_sliding")
 
 
 # --- s03: session windows per user ------------------------------------------
 def s03_session_window(spark, sf):
     s = session_counts(stream_events(spark, sf), gap="5 minutes")
-    return run_to_memory(s, "s03_session", n_state_partitions=8)
+    return run_to_memory(s, "s03_session")
 
 
 # --- s04: late data beyond the watermark is dropped -------------------------
@@ -142,7 +142,7 @@ def s04_late_data_drop(spark, sf):
             .agg(F.count("*").alias("n"))
             .select(F.date_format("w.start", "yyyy-MM-dd").alias("day"), "n")
         )
-        with state_partitions(spark, 8):
+        with state_partitions(spark):
             q = (
                 agg.writeStream.format("parquet")
                 .option("path", out_dir)
@@ -189,7 +189,7 @@ def s05_stream_static_join(spark, sf):
         .agg(F.count("*").alias("n"))
         .select(F.date_format("w.start", "yyyy-MM-dd").alias("day"), "c_mktsegment", "n")
     )
-    return run_to_memory(agg, "s05_stream_static", n_state_partitions=8)
+    return run_to_memory(agg, "s05_stream_static")
 
 
 # --- s06: stream-stream join with event-time interval bounds ----------------
@@ -223,7 +223,7 @@ def s06_stream_stream_join(spark, sf):
         & (F.col("click_ts") <= F.col("buy_ts")),
         "inner",
     ).select("buy_id", "click_id", "user_id")
-    return run_to_memory(joined, "s06_ss_join", n_state_partitions=8)
+    return run_to_memory(joined, "s06_ss_join")
 
 
 # --- s07: streaming dedup within the watermark ------------------------------
@@ -235,7 +235,6 @@ def s07_stream_dedup(spark, sf):
     out = run_to_memory(
         deduped.select("event_id", "user_id", "event_type"),
         "s07_dedup",
-        n_state_partitions=8,
     )
     return out.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -246,9 +245,7 @@ def s07_stream_dedup(spark, sf):
 # --- s08: custom per-key state — running VWAP via applyInPandasWithState ----
 def s08_stateful_custom(spark, sf):
     vwap = running_vwap(stream_events(spark, sf))
-    out = run_to_memory(
-        vwap, "s08_vwap", output_mode="update", n_state_partitions=8
-    )
+    out = run_to_memory(vwap, "s08_vwap", output_mode="update")
     # One output row per key per micro-batch: keep each user's final state.
     # The 4-dp VWAP is derived from the integer tick sum with integer
     # half-up rounding (ticks are cents, so the denominator is 100 * n):
@@ -384,7 +381,6 @@ def s12_incremental_dedup(spark, sf):
     out = run_to_memory(
         deduped.select("event_id", "event_type"),
         "s12_incr_dedup",
-        n_state_partitions=8,
     )
     return out.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -521,7 +517,6 @@ def s14_hll_windowed_stream(spark, sf):
     rollup = run_to_memory(
         hll_rollup_windowed(sdf, ["event_type"], "ts", "user_id", lgk=14),
         "s14_hll_windowed",
-        n_state_partitions=8,
     )
     return rollup.select(
         "event_type",
@@ -559,7 +554,6 @@ def s15_topk_windowed_stream(spark, sf):
     counts = run_to_memory(
         topk_rollup_windowed(sdf, ["event_type"], "ts", "user_id"),
         "s15_topk_windowed",
-        n_state_partitions=8,
     )
     # topk_merge self-joins the rollup; Spark's self-join attribute
     # dedup fails with INTERNAL_ERROR on a MemorySink view leaf, so
@@ -601,7 +595,6 @@ def s18_funnel_stream(spark, sf):
         funnel_state_stream(sdf, ("view", "click", "purchase")),
         "s18_funnel",
         output_mode="update",
-        n_state_partitions=8,
     )
     # tiny per-user emission table; cut lineage before the window
     # (the s15/s16 MemorySink self-reference lesson)
@@ -676,7 +669,6 @@ def s19_quantile_stream(spark, sf):
             sdf, ["event_type"], "ts", "cents", bucket="day"
         ),
         "s19_quanthist",
-        n_state_partitions=8,
     )
     hist = hist.localCheckpoint(eager=True)  # the s15 lineage cut
     summ = spaced_summary(hist, ["event_type"], "day", "cents", _Q180_K)
@@ -750,7 +742,6 @@ def s20_psi_drift_stream(spark, sf):
             sdf, ["event_type"], "ts", "bin", bucket="day"
         ),
         "s20_psihist",
-        n_state_partitions=8,
     )
     hist = hist.localCheckpoint(eager=True)  # the s15 lineage cut
     ref = (
@@ -855,7 +846,7 @@ def s21_pit_enrich_stream(spark, sf):
         "prev_cnt",
         "tier",
     )
-    return run_to_memory(out, "s21_pit", n_state_partitions=8)
+    return run_to_memory(out, "s21_pit")
 
 
 def _s21_sql() -> str:
@@ -946,7 +937,6 @@ def s22_asof_enrich_stream(spark, sf):
     return run_to_memory(
         asof_quote_enrich(sdf, "view", "purchase"),
         "s22_asof",
-        n_state_partitions=8,
     )
 
 
@@ -1019,7 +1009,6 @@ def s23_topk_drift_stream(spark, sf):
             sdf, ["event_type"], "ts", "item", bucket="day"
         ),
         "s23_topkhist",
-        n_state_partitions=8,
     )
     hist = hist.localCheckpoint(eager=True)  # the s15 lineage cut
     return topk_drift(
@@ -1118,7 +1107,6 @@ def s24_cusum_stream(spark, sf):
             sdf, ["event_type"], "ts", cents("value"), bucket="day"
         ),
         "s24_daily",
-        n_state_partitions=8,
     )
     daily = daily.localCheckpoint(eager=True)  # the s15 lineage cut
     return cusum_daily_series(
@@ -1211,7 +1199,6 @@ def s25_rolling_active_stream(spark, sf):
             sdf, [], "ts", "user_id", bucket="day"
         ),
         "s25_active",
-        n_state_partitions=8,
     )
     pairs = pairs.localCheckpoint(eager=True)  # the s15 lineage cut
     active = pairs.select("user_id", F.to_date("day").alias("_day"))

@@ -91,26 +91,13 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Create (or get) a SparkSession with the engine defaults.
 
     local[$SPARK_GRAFT_CPUS] by default; on a real cluster pass the master
     URL (the reference submits to spark://spark-master:7077,
     docker-compose.yml:156-161).
-
-    ``rocksdb_state=True`` switches streaming state to the RocksDB
-    provider — required posture for 100 TB-scale key spaces where
-    HDFS-backed in-memory state maps would blow executor heaps (verified
-    working in this build).
     """
-    if rocksdb_state:
-        extra_conf = dict(extra_conf or {})
-        extra_conf.setdefault(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     if master is None:
         master = default_master()
     if shuffle_partitions is None:

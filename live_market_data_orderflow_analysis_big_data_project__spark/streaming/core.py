@@ -125,25 +125,23 @@ def kafka_source(
 # ---------------------------------------------------------------------------
 
 
-@contextmanager
-def state_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` while a streaming
-    query STARTS (the stateful operators capture the count at first-batch
-    planning and keep it for the checkpoint's lifetime).
+# One state store (plus, for Python stateful ops, one worker+state-server
+# handshake; for stream-stream joins, four stores) exists PER partition PER
+# stateful operator.  The demo streams carry ~1.5k keys, where one
+# partition per core of a 32-core host is pure overhead; a deployment
+# with 10^8 keys raises it instead (docs/TUNING.md).
+STATE_PARTITIONS = 8
 
-    This is the state-sizing knob: one state store (plus, for Python
-    stateful ops, one worker+state-server handshake; for stream-stream
-    joins, four stores) exists PER partition PER stateful operator.  Size
-    it to key cardinality — the demo queries here carry ~1.5k keys, where
-    32 partitions are pure overhead; a 100 TB deployment with 10^8 keys
-    raises it instead (docs/TUNING.md).
-    """
-    if n is None:
-        yield
-        return
+
+@contextmanager
+def state_partitions(spark: SparkSession):
+    """Temporarily pin ``spark.sql.shuffle.partitions`` to
+    ``STATE_PARTITIONS`` while a streaming query STARTS (the stateful
+    operators capture the count at first-batch planning and keep it for
+    the checkpoint's lifetime)."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, str(STATE_PARTITIONS))
     try:
         yield
     finally:
@@ -155,7 +153,6 @@ def run_to_memory(
     name: str,
     output_mode: str = "append",
     timeout_s: int = 300,
-    n_state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming frame to completion (AvailableNow) into a memory
     sink and return the collected batch DataFrame.
@@ -170,7 +167,7 @@ def run_to_memory(
     """
     qname = f"{name}_{next(_qid)}"
     spark = sdf.sparkSession
-    with state_partitions(spark, n_state_partitions):
+    with state_partitions(spark):
         q = (
             sdf.writeStream.format("memory")
             .queryName(qname)

@@ -299,7 +299,6 @@ def test_windowed_rollup_streaming_equals_batch(spark):
     streamed = run_to_memory(
         hll_rollup_windowed(sdf, ["event_type"], "ts", "user_id", lgk=14),
         "hll_windowed",
-        n_state_partitions=8,
     )
     batch = hll_rollup_windowed(
         load_table(spark, SF001, "events").select(*cols),

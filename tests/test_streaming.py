@@ -17,6 +17,7 @@ from live_market_data_orderflow_analysis_big_data_project__spark.operators.candl
 from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
     dedup_within_watermark,
     drain,
+    rocksdb_state,
     run_to_memory,
     session_counts,
     stream_events,
@@ -191,28 +192,16 @@ def test_stream_stream_left_outer_interval_join(spark):
 
 def test_rocksdb_state_store_provider(spark):
     """The 100 TB state posture (RocksDB provider) must actually run."""
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    rows = [(1, _ts(0)), (2, _ts(1)), (3, _ts(30))]
+    sdf = _stream_rows(spark, rows, "id long, ts timestamp")
+    agg = (
+        sdf.withWatermark("ts", "1 minute")
+        .groupBy(F.window("ts", "10 minutes").alias("w"))
+        .agg(F.count("*").alias("n"))
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, provider)
-    try:
-        rows = [(1, _ts(0)), (2, _ts(1)), (3, _ts(30))]
-        sdf = _stream_rows(spark, rows, "id long, ts timestamp")
-        agg = (
-            sdf.withWatermark("ts", "1 minute")
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(F.count("*").alias("n"))
-        )
+    with rocksdb_state(spark):
         out = run_to_memory(agg, "t_rocksdb").collect()
-        assert {r["n"] for r in out} == {2}  # first window closed, n=2
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    assert {r["n"] for r in out} == {2}  # first window closed, n=2
 
 
 def test_exactly_once_sink_across_restart(spark):
@@ -260,7 +249,7 @@ def test_state_partitions_scoped_and_restored(spark):
         .groupBy("id")
         .agg(F.count("*").alias("n"))
     )
-    out = run_to_memory(agg, "t_nparts", output_mode="complete", n_state_partitions=4)
+    out = run_to_memory(agg, "t_nparts", output_mode="complete")
     got = {r["id"]: r["n"] for r in out.collect()}
     assert got == {1: 2, 2: 1}
     assert spark.conf.get(key) == before  # restored after the run

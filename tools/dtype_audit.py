@@ -2,7 +2,7 @@
 
 The driver's correctness gate canonicalizes BOTH sides through pandas
 (observed: its comparator calls ``DataFrame.sort_values`` — the q116
-TypeError traceback in CORRECTNESS_r03).  That makes dtype drift a hash
+TypeError traceback).  That makes dtype drift a hash
 failure even when the VALUES are identical:
 
 - DuckDB ``SUM``/``list_sum`` over integers returns HUGEINT, which
@@ -25,12 +25,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from check_oracle import TABLES  # noqa: E402  (same dir)
+from check_oracle import duck  # noqa: E402  (same dir)
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -47,9 +46,7 @@ def main() -> None:
     if keys:
         qs = {k: qs[k] for k in keys}
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = duck(sf)
 
     spark = get_spark("dtype-audit", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,7 +80,7 @@ def main() -> None:
                 for side, pd_df in (("spark", spd), ("duck", dpd)):
                     # probe the first NON-NULL cell: a leading NULL/NaN
                     # row would otherwise hide arrays/Decimals further
-                    # down the column (ADVICE r4).
+                    # down the column.
                     non_null = pd_df[c].dropna() if len(pd_df) else pd_df[c]
                     if len(non_null):
                         v = non_null.iloc[0]

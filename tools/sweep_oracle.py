@@ -268,32 +268,14 @@ def fingerprints(
 # the sweep
 # --------------------------------------------------------------------------
 
-def _compare_one(spark, con, fn, sql, sf_dir) -> bool:
-    from check_oracle import hash_rows
-
-    spdf = fn(spark, sf_dir).toPandas()
-    dpdf = con.execute(sql).df()
-    if len(spdf) != len(dpdf):
-        return False
-    if sorted(spdf.columns) != sorted(dpdf.columns):
-        return False
-    srows = list(spdf.itertuples(index=False, name=None))
-    drows = list(dpdf.itertuples(index=False, name=None))
-    return hash_rows(list(spdf.columns), srows) == hash_rows(
-        list(dpdf.columns), drows
-    )
-
-
 def _write(record: dict) -> None:
     with open(RECORD, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
 
 
 def main(argv: list[str]) -> int:
-    import duckdb
-
     import __spark_entry__ as ent
-    from check_oracle import TABLES
+    from check_oracle import cols_rows, compare, duck
     from live_market_data_orderflow_analysis_big_data_project__spark.session import (  # noqa: E501
         get_spark,
         query_scope,
@@ -313,34 +295,33 @@ def main(argv: list[str]) -> int:
         return 2
 
     fps = fingerprints(keys)
+    cons = {sf: duck(os.path.join(TESTDATA, sf)) for sf in SFS}
     spark = get_spark("oracle-sweep", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     failed = []
     for i, key in enumerate(keys, 1):
         entry = {"fingerprint": fps[key], "sfs": {}}
         for sf in SFS:
-            sf_dir = os.path.join(TESTDATA, sf)
-            con = duckdb.connect()
-            for t in TABLES:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-                )
             t0 = time.time()
             try:
                 with query_scope(spark, key):
-                    ok = _compare_one(spark, con, qs[key], osql[key], sf_dir)
+                    spdf = qs[key](spark, os.path.join(TESTDATA, sf)).toPandas()
+                problems = compare(*cols_rows(spdf),
+                                   *cols_rows(cons[sf].execute(osql[key]).df()))
             except Exception as e:  # noqa: BLE001 — record, don't abort sweep
-                print(f"ERR  {key} @ {sf}: {type(e).__name__}: {e}")
-                ok = False
-            con.close()
+                problems = [f"{type(e).__name__}: {e}"]
+            ok = not problems
             entry["sfs"][sf] = ok
             print(f"[{i}/{len(keys)}] {'PASS' if ok else 'FAIL'} {key} @ {sf} "
                   f"({time.time() - t0:.1f}s)", flush=True)
             if not ok:
+                print("    " + "\n    ".join(problems), flush=True)
                 failed.append((key, sf))
         record[key] = entry
         _write(record)  # a cut-short sweep keeps what it proved
     spark.stop()
+    for con in cons.values():
+        con.close()
     _write(record)
     print(f"\nwrote {RECORD} ({len(record)} entries)")
     if failed:
