@@ -1596,8 +1596,9 @@ GROUP BY c_mktsegment
 def q132_write_tables(spark, sf) -> tuple[str, str]:
     """The amortized half of q132: persist orders/lineitem bucketed by
     the join key (eager saveAsTable).  Returns the catalog names.
-    Split out so tools/scale_probe.py can time write and join
-    separately — the 'shuffle paid once' claim needs its own number.
+    The write is eager, so bench.py's build part of
+    q132_bucketed_join times it and the execute part times the join
+    alone — the 'shuffle paid once' claim gets its own number.
 
     Bucket count = 32 (local core width): a bucketed scan plans ONE
     task per bucket, so the bucket count is a hard read-parallelism

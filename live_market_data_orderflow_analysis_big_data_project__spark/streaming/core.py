@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -643,28 +642,6 @@ def rocksdb_state(spark: SparkSession):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-
-
-# ---------------------------------------------------------------------------
-# Replay helpers (multi-batch fixtures)
-# ---------------------------------------------------------------------------
-
-
-def write_replay_files(
-    dfs: list[DataFrame], base_dir: str | None = None
-) -> str:
-    """Write each frame as one parquet file with strictly increasing
-    modification times so the file streaming source replays them as
-    ordered micro-batches (with maxFilesPerTrigger=1)."""
-    base_dir = base_dir or tempfile.mkdtemp(prefix="replay_")
-    t0 = 1_700_000_000
-    for i, df in enumerate(dfs):
-        sub = os.path.join(base_dir, f"b{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        for root, _dirs, files in os.walk(sub):
-            for fname in files:
-                os.utime(os.path.join(root, fname), (t0 + i, t0 + i))
-    return os.path.join(base_dir, "b*", "part-*.parquet")
 
 
 def kafka_sink(

@@ -8,10 +8,10 @@ candles, the data_processor.py:81-165 shape) as N parquet chunk files
 drained by micro-batches, and reports sustained events/sec plus micro-batch
 latency percentiles from the query's own progress metrics.
 
-Usage: python tools/bench_streaming.py [sf_dir] [n_chunks]
+Usage: python tools/bench_streaming.py [sf_dir] [n_chunks] [n_repeats]
 Prints ONE JSON line; the driver-facing wall number is events/sec.
 
-Stress mode (VERDICT r6 item 7):
+Stress mode:
 
     python tools/bench_streaming.py --stress [sf_dir] [mult] [n_chunks]
 
@@ -40,25 +40,76 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # host-load provenance at import (== harness start) — the bench.py rule
 _LOADAVG = [round(x, 2) for x in os.getloadavg()]
 
+from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.window import Window  # noqa: E402
+
+from live_market_data_orderflow_analysis_big_data_project__spark import get_spark  # noqa: E402
+from live_market_data_orderflow_analysis_big_data_project__spark.operators.candles import (  # noqa: E402
+    ohlc_candles,
+)
+from live_market_data_orderflow_analysis_big_data_project__spark.operators.ticks import (  # noqa: E402
+    aggressor_side,
+)
+from live_market_data_orderflow_analysis_big_data_project__spark.sources.tables import (  # noqa: E402
+    load_table,
+)
+from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (  # noqa: E402
+    drain,
+    kafka_sink_capture,
+)
+
+
+def replay_candles(spark, schema, src: str):
+    """The flagship pipeline over the chunk files in ``src``, one file
+    per micro-batch: events -> ticks (aggressor side) -> watermarked
+    1-minute OHLC candles."""
+    ticks = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .select(
+            F.col("user_id").cast("string").alias("instrument"),
+            F.col("ts").alias("event_time"),
+            F.col("value").alias("ltp"),
+            F.lit(1).cast("long").alias("ltq"),
+        )
+        .withColumn(
+            "side", aggressor_side(F.col("ltp"), F.lit(50.0), F.lit(150.0))
+        )
+    )
+    return ohlc_candles(ticks, window="1 minute", watermark="5 minutes")
+
+
+def drain_noop(candles, timeout_s: int) -> tuple[float, list[dict]]:
+    """Drain ``candles`` into the noop sink; return the wall seconds and
+    the progress of every micro-batch that read input."""
+    t0 = time.time()
+    q = (
+        candles.writeStream.format("noop")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain(q, timeout_s)
+    wall = time.time() - t0
+    return wall, [p for p in q.recentProgress if p["numInputRows"] > 0]
+
+
+def batch_ms(progresses: list[dict]) -> list[int]:
+    """Sorted micro-batch trigger times (ms)."""
+    return sorted(p["durationMs"].get("triggerExecution", 0) for p in progresses)
+
+
+def pct(sorted_ms: list[int], p: float) -> int:
+    """Nearest-rank percentile: ceil(p*n)-1 (int(p*n) overshoots to the
+    max for small n, overstating p95); -1 when there are no batches."""
+    if not sorted_ms:
+        return -1
+    n = len(sorted_ms)
+    return sorted_ms[max(0, min(n - 1, math.ceil(p * n) - 1))]
+
 
 def stress(sf_dir: str, mult: int, n_chunks: int) -> None:
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from live_market_data_orderflow_analysis_big_data_project__spark import get_spark
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.candles import (
-        ohlc_candles,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.ticks import (
-        aggressor_side,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.sources.tables import (
-        load_table,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
-        drain,
-    )
-
     spark = get_spark(
         "stream-stress",
         # default retention is 100 progress updates: a long stress run
@@ -97,46 +148,8 @@ def stress(sf_dir: str, mult: int, n_chunks: int) -> None:
         ).write.mode("append").parquet(src)
     chunked.unpersist()
 
-    schema = big.schema
-    ticks = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select(
-            F.col("user_id").cast("string").alias("instrument"),
-            F.col("ts").alias("event_time"),
-            F.col("value").alias("ltp"),
-            F.lit(1).cast("long").alias("ltq"),
-        )
-        .withColumn(
-            "side", aggressor_side(F.col("ltp"), F.lit(50.0), F.lit(150.0))
-        )
-    )
-    candles = ohlc_candles(ticks, window="1 minute", watermark="5 minutes")
-
-    t0 = time.time()
-    q = (
-        candles.writeStream.format("noop")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, 1800)
-    wall = time.time() - t0
-
-    progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    batch_ms = sorted(
-        p["durationMs"].get("triggerExecution", 0) for p in progresses
-    )
-
-    def pct(p: float) -> float:
-        # nearest-rank percentile: ceil(p*n)-1 (int(p*n) overshoots to
-        # the max for small n, overstating p95)
-        if not batch_ms:
-            return -1
-        return batch_ms[max(0, min(len(batch_ms) - 1,
-                                   math.ceil(p * len(batch_ms)) - 1))]
-
+    wall, progresses = drain_noop(replay_candles(spark, big.schema, src), 1800)
+    ms = batch_ms(progresses)
     state_rows = [
         s["numRowsTotal"]
         for p in progresses
@@ -158,10 +171,10 @@ def stress(sf_dir: str, mult: int, n_chunks: int) -> None:
                 "n_events": n_events,
                 "n_keys": n_keys,
                 "wall_sec": round(wall, 2),
-                "n_micro_batches": len(batch_ms),
-                "micro_batch_ms_p50": pct(0.5),
-                "micro_batch_ms_p95": pct(0.95),
-                "micro_batch_ms_max": batch_ms[-1] if batch_ms else -1,
+                "n_micro_batches": len(ms),
+                "micro_batch_ms_p50": pct(ms, 0.5),
+                "micro_batch_ms_p95": pct(ms, 0.95),
+                "micro_batch_ms_max": ms[-1] if ms else -1,
                 "state_rows_max": max(state_rows, default=-1),
                 "state_rows_last": state_rows[-1] if state_rows else -1,
                 "state_memory_bytes_max": max(state_mem, default=-1),
@@ -185,32 +198,12 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     n_chunks = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-    # VERDICT r9 item 7: run-to-run variance on unchanged code measured
-    # ~1.5x (host state), so a single sample can silently cherry-pick.
-    # The drain runs N times and the HEADLINE is the conservative end
-    # (min events/sec, max p50) COMPUTED here, not chosen by hand;
+    # Run-to-run variance on unchanged code measured ~1.5x (host
+    # state), so a single sample can silently cherry-pick.  The drain
+    # runs N times and the HEADLINE is the conservative end (min
+    # events/sec, max p50) COMPUTED here, not chosen by hand;
     # min/median/max are all recorded.
-    n_repeats = int(
-        sys.argv[3] if len(sys.argv) > 3
-        else os.environ.get("SPARK_GRAFT_STREAMBENCH_REPEATS", "3")
-    )
-
-    from pyspark.sql import functions as F
-
-    from live_market_data_orderflow_analysis_big_data_project__spark import get_spark
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.candles import (
-        ohlc_candles,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.ticks import (
-        aggressor_side,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.sources.tables import (
-        load_table,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.streaming.core import (
-        drain,
-        kafka_sink_capture,
-    )
+    n_repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
     spark = get_spark(
         "stream-bench",
@@ -229,53 +222,16 @@ def main() -> None:
         "overwrite"
     ).parquet(src)
 
-    schema = events.schema
-
-    def _drain_once() -> tuple[float, list[int]]:
-        ticks = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .select(
-                F.col("user_id").cast("string").alias("instrument"),
-                F.col("ts").alias("event_time"),
-                F.col("value").alias("ltp"),
-                F.lit(1).cast("long").alias("ltq"),
-            )
-            .withColumn(
-                "side",
-                aggressor_side(F.col("ltp"), F.lit(50.0), F.lit(150.0)),
-            )
-        )
-        candles = ohlc_candles(ticks, window="1 minute", watermark="5 minutes")
-        t0 = time.time()
-        q = (
-            candles.writeStream.format("noop")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q, 600)
-        wall = time.time() - t0
-        progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        return wall, sorted(
-            p["durationMs"].get("triggerExecution", 0) for p in progresses
-        )
-
-    runs = [_drain_once() for _ in range(max(1, n_repeats))]
+    runs = [
+        drain_noop(replay_candles(spark, events.schema, src), 600)
+        for _ in range(max(1, n_repeats))
+    ]
     # conservative headline run = the SLOWEST drain; batch_ms percentiles
     # are computed from that run's own progress, so the (value, p50) pair
     # stays internally consistent.
-    wall, batch_ms = max(runs, key=lambda r: r[0])
+    wall, progresses = max(runs, key=lambda r: r[0])
+    ms = batch_ms(progresses)
     eps_runs = sorted(round(n_events / w, 1) for w, _ in runs)
-
-    def pct(p: float) -> float:
-        # nearest-rank percentile: ceil(p*n)-1 (int(p*n) overshoots to
-        # the max for small n, overstating p95)
-        if not batch_ms:
-            return -1
-        return batch_ms[max(0, min(len(batch_ms) - 1,
-                                   math.ceil(p * len(batch_ms)) - 1))]
 
     # --- Kafka wire-shape path (reference data_processor.py:177-183) -----
     # Same replay through candles -> serialize_json -> kafka_sink_capture:
@@ -284,24 +240,12 @@ def main() -> None:
     # serialize+sink cost the parquet-path number leaves out.
     wire_out = tempfile.mkdtemp(prefix="streambench_wire_")
     wire_ck = tempfile.mkdtemp(prefix="streambench_wireck_")
-    ticks2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select(
-            F.col("user_id").cast("string").alias("instrument"),
-            F.col("ts").alias("event_time"),
-            F.col("value").alias("ltp"),
-            F.lit(1).cast("long").alias("ltq"),
-        )
-        .withColumn(
-            "side", aggressor_side(F.col("ltp"), F.lit(50.0), F.lit(150.0))
-        )
-    )
-    candles2 = ohlc_candles(ticks2, window="1 minute", watermark="5 minutes")
     t1 = time.time()
     q2 = kafka_sink_capture(
-        candles2, wire_out, wire_ck, key_col="instrument"
+        replay_candles(spark, events.schema, src),
+        wire_out,
+        wire_ck,
+        key_col="instrument",
     )
     drain(q2, 600)
     kafka_wall = time.time() - t1
@@ -324,9 +268,9 @@ def main() -> None:
                     "events_per_sec_max": eps_runs[-1],
                     "statistic": "value/p50 reported from the slowest run",
                 },
-                "n_micro_batches": len(batch_ms),
-                "micro_batch_ms_p50": pct(0.5),
-                "micro_batch_ms_max": batch_ms[-1] if batch_ms else -1,
+                "n_micro_batches": len(ms),
+                "micro_batch_ms_p50": pct(ms, 0.5),
+                "micro_batch_ms_max": ms[-1] if ms else -1,
                 "kafka_shape": {
                     "events_per_sec": round(n_events / kafka_wall, 1),
                     "wall_sec": round(kafka_wall, 2),

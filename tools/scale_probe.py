@@ -3,33 +3,39 @@
 Materializes a MULT-x replica of the sf0.1 fixtures (key spaces scaled with
 the data: user/cust keys are offset per copy so cardinality grows too, the
 honest formulation — replicating rows under fixed keys would inflate groups
-instead of scaling them), then times representative queries at 1x and MULT-x
-and reports the wall-time ratio.  A keyed, shuffle-bounded plan should land
-near MULT (linear); a quadratic, driver-bound, or misplanned-broadcast plan
-blows past it.  This probe is how the q20/q26 fact-broadcast misplan was
-caught (46.9x wall at 16x before the merge hints; ~linear after).
+instead of scaling them), then times representative queries() entries at
+1x and MULT-x and reports the wall-time ratio.  A keyed, shuffle-bounded
+plan should land near MULT (linear); a quadratic, driver-bound, or
+misplanned-broadcast plan blows past it.  This probe is how the q20/q26
+fact-broadcast misplan was caught (46.9x wall at 16x before the merge
+hints; ~linear after).
 
-Each (query, scale) measurement runs in its OWN subprocess so timings
-can't be contaminated by accumulated session state (plan caches, GC
-pressure, MLlib lineages) — a single shared session was measured to
-inflate some entries >10x.
+Each (query, scale) cell is ``python bench.py KEY`` in its OWN process, so
+timings can't be contaminated by accumulated session state (plan caches,
+GC pressure, MLlib lineages) — a single shared session was measured to
+inflate some entries >10x.  A cell is bench's median of 3 samples.
 
-Writes docs/SCALING.md.  Usage: python tools/scale_probe.py [mult]
+Rewrites the head of docs/SCALING.md (title, intro, table); every line
+after the table is kept as it is.  Usage: python tools/scale_probe.py [mult]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.1"
 PROBE_DIR = "/tmp/scale_probe"
-DRIVER_MEM = "24g"  # local-mode driver == whole JVM; 1g serves sf0.1 only
+DOC = os.path.join(ROOT, "docs", "SCALING.md")
+# local-mode driver == whole JVM; the session's core-sized default
+# serves sf0.1 only
+DRIVER_MEM_MB = "24576"
 
 # (query key, why it's representative)
 PROBE_QUERIES = [
@@ -56,8 +62,6 @@ PROBE_QUERIES = [
     ("q124_fingerprint_overlap", "mod-p sampled gram fingerprints, df-suppressed bounded pair fan-out"),
     ("q126_jsonl_roundtrip", "format IO: JSONL write + pinned-schema read + checksum agg"),
     ("q132_bucketed_join", "bucketed write + exchange-free co-located SMJ"),
-    ("q132_write_only", "bucketed write alone (the amortized one-time shuffle)"),
-    ("q132_join_only", "co-located SMJ read path alone (the per-query cost)"),
     ("q133_partition_prune", "partitioned write + pruned read-back (5 of 30 day dirs)"),
     ("q134_hybrid_rrf", "retrieval fusion over bounded top-k lists (BM25 side scales; fuse is flat)"),
     ("q135_compact_small_files", "fragmented partitioned write + compaction rewrite"),
@@ -72,68 +76,69 @@ PROBE_QUERIES = [
     ("q140b_zorder_rank_tiles", "rank-tile z-order: domain-sized tile maps broadcast + two layout writes"),
     ("q141_hll_sketch_rollup", "HLL sketch rollup: map-side sketch partials, ~kB per (group,bucket) shuffled (16x users crosses the lgk=14 coupon capacity into the dense regime — flags may be false there, wall is the probe)"),
     ("q106b_decontaminate_bloom", "bloom-prefiltered decontamination: one-row bitmap broadcast + codegen probe in the shingle explode stage (vs q106's exact broadcast join)"),
-    ("q142_staged_hist_report", "STAGED r8 (now queries/ablock.py): sparse histogram rollup report — one (group,bucket,bin) count shuffle + map packs + audit joins"),
-    ("q143_staged_topk", "STAGED: certified top-k rollup — one (group,bucket,item) count shuffle + per-bucket top-m window, never a global sort"),
-    ("q145_staged_kmv", "STAGED: KMV theta set-ops — distinct-hash shuffle + bottom-k windows; pair joins on the |labels|-row sketch frame (16x users saturates k=4096: times the estimation regime)"),
-    ("q146_staged_fuzzy", "STAGED: FastSS deletion-neighborhood fuzzy match — bounded |s|+1 variant explode + neighbor-bounded bucket join + levenshtein verify, never all-pairs"),
-    ("q146_fuzzy_capped", "q146 with max_bucket=16 engaged: hot variant keys suppressed by a broadcast anti-join — the r9 scale knob's before/after pair"),
-    ("q147_staged_pps", "STAGED: systematic PPS sample — one per-stratum window over one scan, exact integer ticket math, zero joins"),
-    ("q148_staged_phrase", "STAGED: positional-index phrase search — posexplode + (term,doc) groupBy build, postings-only joins at query time"),
-    ("q149_staged_incsimhash", "STAGED: incremental SimHash near-dup — shard-only fingerprinting, band join vs the persisted index, never old x old"),
-    ("q150_staged_gapfill", "STAGED: time-bucket gapfill + LOCF/interp — one data shuffle to (key,bucket); grid/windows sized by keys x span, not rows"),
-    ("q151_staged_retention", "STAGED: cohort retention — (user,day) distinct + windows on user, (cohort,age) agg; 16x users scales the key space"),
-    ("q152_staged_mad", "STAGED: median/MAD outlier screen — two per-group selection windows + broadcast medians; per-group sort is the exactness cost"),
-    ("q153_staged_streaks", "STAGED: gaps-and-islands streaks — distinct + row_number + two groupBys, all keyed by user"),
-    ("q154_staged_corr", "STAGED: exact-moment pairwise correlation — one (type,hour) cents shuffle; the pair join runs on the domain-bounded hourly frame"),
-    ("q155_staged_rangejoin", "STAGED: bin-decomposed range COUNT — interior bins pre-aggregated, only boundary bins row-checked; never BNLJ/cartesian, no pair materialization"),
-    ("q156_staged_twap", "STAGED: daily TWAP — one (type,day) shuffle shared by the lead() window and the agg; per-partition width = a day's ticks per key"),
-    ("q157_staged_profile", "STAGED: one-pass column profile — single scan, k exact-distinct aggs on one Expand (k x row traffic map-side, distinct partials shuffled)"),
-    ("q158_staged_transitions", "STAGED: transition matrix — one (user) shuffle for the lag window, then a domain-bounded (|states|^2) count agg"),
-    ("q159_staged_basket", "STAGED: basket co-occurrence lift — (basket,item) distinct + basket-keyed self-join, fan-out <= items-per-basket^2; supports broadcast"),
-    ("q160_staged_sweepline", "STAGED: sweep-line peak concurrency — endpoints union + one per-day window sort, linear in endpoints (overlap self-join would be quadratic)"),
-    ("q161_staged_wquantiles", "STAGED: weighted quantiles — broadcast dim join + ONE per-brand (cents,id) window sort, cross-multiplied int64 selection"),
-    ("q162_staged_integrity", "STAGED: FK orphan audit — four key-only LEFT joins (columns pruned at scan, parents key-deduped), map-side-collapsing count aggs"),
-    ("q163_staged_skyline", "STAGED: 2-D skyline — sorted-prefix windows per brand, n log n vs the quadratic dominance join it replaces"),
-    ("q164_staged_balance", "STAGED: clamped running balance — the non-associative fold as ONE per-user window pass (Lindley reflection identity), no recursion/UDF"),
-    ("q165_staged_concentration", "STAGED: Gini/HHI/top-decile — one (type,user) totals shuffle, per-type rank window over the actor frame, one row per type out"),
-    ("q166_staged_cusum", "STAGED: CUSUM drift monitor — q152's two selection windows + q164's fold window, all sharing the (type) key; alarms are a conditional agg"),
-    ("q167_staged_psi", "STAGED: PSI drift — one reference rank window for edges, broadcast edge frame into both scans, map-side bin counts; keys x bins out"),
-    ("q168_staged_rolling", "STAGED: rolling distinct actives — (user,day) distinct + factor-w explode of the ACTIVE-PAIR frame + one more distinct; no per-day rescans"),
-    ("q169_staged_coalesce", "STAGED: interval coalescing — one per-(user,day) sorted sweep (running-max episode breaks), never the quadratic overlap pairing"),
-    ("q170_staged_triangles", "STAGED r9 (now queries/ablock.py): degree-ordered triangle counting — wedge fan-out bounded O(sqrt(2m)) per node, two equi-joins on the oriented edge table"),
-    ("q171_staged_pagerank", "STAGED r9: integer-quantized PageRank, 3 bounded shuffle rounds with per-iteration lineage cuts"),
-    ("q172_staged_funnel_within", "STAGED r9: WITHIN-clause funnel — one per-user collect+fold shuffle, the conversion window rides in the fold state"),
-    ("q173_staged_boolean_search", "STAGED r9: boolean retrieval — per-term posting joins + one AQE-decided anti-join"),
-    ("q174_staged_setsim", "STAGED r10 (now queries/ablock.py): prefix-filtered shingle-set similarity join — rarest-first prefix postings join + length filter + bounded verify, never all-pairs"),
-    ("q175_staged_kcore", "STAGED r10: k-core peeling, 6 fixed rounds — two keyed shuffles per round on a shrinking edge frame, localCheckpoint lineage cuts"),
-    ("q176_staged_collocations", "STAGED r10: collocation lift — one bigram count shuffle + vocabulary-sized margin joins + 1-row total crossJoin"),
-    ("q177_staged_overlapjoin", "STAGED r10: bin-decomposed interval x interval overlap join — bin equi-join, first-shared-bin dedup, TRUE pair volume is the output term"),
-    ("q178_staged_skew_report", "STAGED r10: join-key skew diagnostics — one per-key count agg + a global window over the provably O(sqrt n) bucket-size histogram"),
-    ("q179_staged_groupedagg", "STAGED r11 (now queries/ablock.py): grouped-agg pandas UDF cell — one keyed exchange into ArrowAggregatePython, whole groups cross to Python"),
-    ("q180_staged_quantile", "STAGED r11: mergeable rank-spaced quantile rollup — one (group,day,value) count shuffle + per-bucket windows over the histogram, report joins are group-sized"),
-    ("q181_staged_wsample", "STAGED r11: weighted ticket-race sample — O(sum w) map-side explode collapsed by algebraic min, one item-frame shuffle + per-stratum top-n window"),
-    ("q182_staged_proximity", "STAGED r11: NEAR/k proximity retrieval — two posting-bucket scans + one doc_id equi-join, nested HOF position algebra, no explode"),
-    ("q183_staged_kmeans", "STAGED r12 (now queries/ablock.py): integer-quantized k-means — per-iteration broadcast of k centroid rows + one (cluster,dim) update shuffle; the assignment scan is the only data term"),
-    ("q184_staged_attribution", "STAGED r12 (now queries/ablock.py): last/first-touch attribution — ONE per-user RANGE-frame window pass over integer microseconds, never the touches x conversions pair join"),
-    ("q185_staged_bigramlm", "STAGED r12 (now queries/ablock.py): interpolated-bigram NLL — one bigram-instance frame, three count aggs over it, LM joined back keyed by (w1,w2)"),
-    ("q186_staged_trend", "STAGED r12 (now queries/ablock.py): grouped OLS trend — one map-side-combinable moment shuffle; everything downstream is |groups|-sized"),
-    ("q187_staged_autocorr", "STAGED r12 (now queries/ablock.py): lag-k autocorrelation — one daily-cents shuffle; grid fill + lag join run on the domain-bounded (type x day) frame"),
-    ("q188_staged_clustersplit", "STAGED r12 (now queries/ablock.py): cluster-safe split — q111's star-edge + bounded near-dup CC, then two keyed lookups (cluster, rep text)"),
-    ("q189_staged_vwapvol", "STAGED r12 (now queries/ablock.py): VWAP + realized vol — one (type, day) shuffle shared by the lag window and the agg (the q156 TWAP plan shape)"),
-    ("q190_staged_bpe", "STAGED r12 (now queries/ablock.py): BPE merge learning — corpus-sized work is ONE token count; 3 merge rounds on the vocab frame, 1-row argmax collects"),
-    ("q191_staged_pq", "STAGED r12 (now queries/ablock.py): PQ-ADC top-k — m bounded Lloyd loops (broadcast assigns + (cluster,dim) update shuffles), then the CODES frame joins an n_queries*m*k-row broadcast table; no full-vector traffic at query time"),
-    ("q192_staged_seasonal", "STAGED r12 (now queries/ablock.py): seasonal day-of-week MAD screen — one daily-totals shuffle, then two keyed selection windows + two broadcast baseline joins on the domain-bounded (type x day) frame"),
-    ("q193_staged_ivfpq", "STAGED r13 (now queries/ablock.py): IVF-PQ top-k — coarse + m PQ Lloyd loops (broadcast assigns + (cluster,dim) update shuffles), search joins the codes frame against an n_queries*nprobe broadcast of probed lists then the broadcast ADC table; per-query work proportional to probed-list population, never the corpus"),
-    ("q194_staged_bpebatch", "STAGED r13 (now queries/ablock.py): batched BPE — one corpus token-count shuffle, then n_rounds vocab-frame pair counts with ONE m-row collect each (k/m driver round-trips, the q190 shape batched)"),
-    ("q195_staged_bitlsh", "STAGED r14 (now queries/ablock.py): hyperplane bit-LSH top-k — one narrow signature projection (B aggregate HOFs, JVM codegen, no shuffle), candidate generation scans n_queries x n SIGNATURE bigints through a per-query top-C window, only n_queries x C rows rejoin full vectors"),
-    ("q196_staged_entropy", "STAGED r14 (now queries/ablock.py): char-entropy quality screen — one (doc, char) explode linear in corpus bytes + one map-side-collapsing (doc, char) count shuffle (<= |alphabet| rows per doc out) + one doc-keyed agg"),
+    ("q142_hist_rollup_report", "sparse histogram rollup report — one (group,bucket,bin) count shuffle + map packs + audit joins"),
+    ("q143_topk_certified", "certified top-k rollup — one (group,bucket,item) count shuffle + per-bucket top-m window, never a global sort"),
+    ("q145_kmv_setops", "KMV theta set-ops — distinct-hash shuffle + bottom-k windows; pair joins on the |labels|-row sketch frame (16x users saturates k=4096: times the estimation regime)"),
+    ("q146_fuzzy_match", "FastSS deletion-neighborhood fuzzy match — bounded |s|+1 variant explode + neighbor-bounded bucket join + levenshtein verify, never all-pairs"),
+    ("q147_pps_sample", "systematic PPS sample — one per-stratum window over one scan, exact integer ticket math, zero joins"),
+    ("q148_phrase_search", "positional-index phrase search — posexplode + (term,doc) groupBy build, postings-only joins at query time"),
+    ("q149_incremental_simhash", "incremental SimHash near-dup — shard-only fingerprinting, band join vs the persisted index, never old x old"),
+    ("q150_gapfill_locf", "time-bucket gapfill + LOCF/interp — one data shuffle to (key,bucket); grid/windows sized by keys x span, not rows"),
+    ("q151_retention_cohorts", "cohort retention — (user,day) distinct + windows on user, (cohort,age) agg; 16x users scales the key space"),
+    ("q152_mad_outliers", "median/MAD outlier screen — two per-group selection windows + broadcast medians; per-group sort is the exactness cost"),
+    ("q153_activity_streaks", "gaps-and-islands streaks — distinct + row_number + two groupBys, all keyed by user"),
+    ("q154_pairwise_corr", "exact-moment pairwise correlation — one (type,hour) cents shuffle; the pair join runs on the domain-bounded hourly frame"),
+    ("q155_range_join_concurrency", "bin-decomposed range COUNT — interior bins pre-aggregated, only boundary bins row-checked; never BNLJ/cartesian, no pair materialization"),
+    ("q156_twap_daily", "daily TWAP — one (type,day) shuffle shared by the lead() window and the agg; per-partition width = a day's ticks per key"),
+    ("q157_profile_audit", "one-pass column profile — single scan, k exact-distinct aggs on one Expand (k x row traffic map-side, distinct partials shuffled)"),
+    ("q158_event_transitions", "transition matrix — one (user) shuffle for the lag window, then a domain-bounded (|states|^2) count agg"),
+    ("q159_basket_lift", "basket co-occurrence lift — (basket,item) distinct + basket-keyed self-join, fan-out <= items-per-basket^2; supports broadcast"),
+    ("q160_peak_concurrency", "sweep-line peak concurrency — endpoints union + one per-day window sort, linear in endpoints (overlap self-join would be quadratic)"),
+    ("q161_weighted_quantiles", "weighted quantiles — broadcast dim join + ONE per-brand (cents,id) window sort, cross-multiplied int64 selection"),
+    ("q162_fk_orphan_audit", "FK orphan audit — four key-only LEFT joins (columns pruned at scan, parents key-deduped), map-side-collapsing count aggs"),
+    ("q163_price_qty_skyline", "2-D skyline — sorted-prefix windows per brand, n log n vs the quadratic dominance join it replaces"),
+    ("q164_clamped_balance", "clamped running balance — the non-associative fold as ONE per-user window pass (Lindley reflection identity), no recursion/UDF"),
+    ("q165_flow_concentration", "Gini/HHI/top-decile — one (type,user) totals shuffle, per-type rank window over the actor frame, one row per type out"),
+    ("q166_cusum_drift", "CUSUM drift monitor — q152's two selection windows + q164's fold window, all sharing the (type) key; alarms are a conditional agg"),
+    ("q167_psi_drift", "PSI drift — one reference rank window for edges, broadcast edge frame into both scans, map-side bin counts; keys x bins out"),
+    ("q168_rolling_active", "rolling distinct actives — (user,day) distinct + factor-w explode of the ACTIVE-PAIR frame + one more distinct; no per-day rescans"),
+    ("q169_coalesced_activity", "interval coalescing — one per-(user,day) sorted sweep (running-max episode breaks), never the quadratic overlap pairing"),
+    ("q170_triangle_counts", "degree-ordered triangle counting — wedge fan-out bounded O(sqrt(2m)) per node, two equi-joins on the oriented edge table"),
+    ("q171_pagerank", "integer-quantized PageRank, 3 bounded shuffle rounds with per-iteration lineage cuts"),
+    ("q172_funnel_within", "WITHIN-clause funnel — one per-user collect+fold shuffle, the conversion window rides in the fold state"),
+    ("q173_boolean_search", "boolean retrieval — per-term posting joins + one AQE-decided anti-join"),
+    ("q174_setsim_join", "prefix-filtered shingle-set similarity join — rarest-first prefix postings join + length filter + bounded verify, never all-pairs"),
+    ("q175_kcore", "k-core peeling, 6 fixed rounds — two keyed shuffles per round on a shrinking edge frame, localCheckpoint lineage cuts"),
+    ("q176_collocations", "collocation lift — one bigram count shuffle + vocabulary-sized margin joins + 1-row total crossJoin"),
+    ("q177_interval_overlap", "bin-decomposed interval x interval overlap join — bin equi-join, first-shared-bin dedup, TRUE pair volume is the output term"),
+    ("q178_skew_report", "join-key skew diagnostics — one per-key count agg + a global window over the provably O(sqrt n) bucket-size histogram"),
+    ("q179_grouped_agg_pandas", "grouped-agg pandas UDF cell — one keyed exchange into ArrowAggregatePython, whole groups cross to Python"),
+    ("q180_quantile_rollup", "mergeable rank-spaced quantile rollup — one (group,day,value) count shuffle + per-bucket windows over the histogram, report joins are group-sized"),
+    ("q181_weighted_sample", "weighted ticket-race sample — O(sum w) map-side explode collapsed by algebraic min, one item-frame shuffle + per-stratum top-n window"),
+    ("q182_proximity_search", "NEAR/k proximity retrieval — two posting-bucket scans + one doc_id equi-join, nested HOF position algebra, no explode"),
+    ("q183_kmeans", "integer-quantized k-means — per-iteration broadcast of k centroid rows + one (cluster,dim) update shuffle; the assignment scan is the only data term"),
+    ("q184_attribution", "last/first-touch attribution — ONE per-user RANGE-frame window pass over integer microseconds, never the touches x conversions pair join"),
+    ("q185_bigram_nll", "interpolated-bigram NLL — one bigram-instance frame, three count aggs over it, LM joined back keyed by (w1,w2)"),
+    ("q186_group_trend", "grouped OLS trend — one map-side-combinable moment shuffle; everything downstream is |groups|-sized"),
+    ("q187_autocorr", "lag-k autocorrelation — one daily-cents shuffle; grid fill + lag join run on the domain-bounded (type x day) frame"),
+    ("q188_cluster_split", "cluster-safe split — q111's star-edge + bounded near-dup CC, then two keyed lookups (cluster, rep text)"),
+    ("q189_vwap_vol", "VWAP + realized vol — one (type, day) shuffle shared by the lag window and the agg (the q156 TWAP plan shape)"),
+    ("q190_bpe_merges", "BPE merge learning — corpus-sized work is ONE token count; 3 merge rounds on the vocab frame, 1-row argmax collects"),
+    ("q191_pq_topk", "PQ-ADC top-k — m bounded Lloyd loops (broadcast assigns + (cluster,dim) update shuffles), then the CODES frame joins an n_queries*m*k-row broadcast table; no full-vector traffic at query time"),
+    ("q192_seasonal_outliers", "seasonal day-of-week MAD screen — one daily-totals shuffle, then two keyed selection windows + two broadcast baseline joins on the domain-bounded (type x day) frame"),
+    ("q193_ivfpq_topk", "IVF-PQ top-k — coarse + m PQ Lloyd loops (broadcast assigns + (cluster,dim) update shuffles), search joins the codes frame against an n_queries*nprobe broadcast of probed lists then the broadcast ADC table; per-query work proportional to probed-list population, never the corpus"),
+    ("q194_bpe_batched", "batched BPE — one corpus token-count shuffle, then n_rounds vocab-frame pair counts with ONE m-row collect each (k/m driver round-trips, the q190 shape batched)"),
+    ("q195_bitlsh_topk", "hyperplane bit-LSH top-k — one narrow signature projection (B aggregate HOFs, JVM codegen, no shuffle), candidate generation scans n_queries x n SIGNATURE bigints through a per-query top-C window, only n_queries x C rows rejoin full vectors"),
+    ("q196_char_entropy", "char-entropy quality screen — one (doc, char) explode linear in corpus bytes + one map-side-collapsing (doc, char) count shuffle (<= |alphabet| rows per doc out) + one doc-keyed agg"),
 ]
 
 
 def replicate(mult: int) -> str:
     """Write MULT-x copies of each fixture with offset keys."""
     out = os.path.join(PROBE_DIR, f"x{mult}")
-    done_marker = os.path.join(out, "_REPLICATED")
+    # renamed when the replica's contents change, so an older replica
+    # is rebuilt rather than reused
+    done_marker = os.path.join(out, "_REPLICATED_SCALED_NAMES")
     if os.path.exists(done_marker):
         return out
     shutil.rmtree(out, ignore_errors=True)
@@ -146,7 +151,8 @@ def replicate(mult: int) -> str:
     )
 
     spark = get_spark(
-        "scale-probe-replicate", extra_conf={"spark.driver.memory": DRIVER_MEM}
+        "scale-probe-replicate",
+        extra_conf={"spark.driver.memory": f"{DRIVER_MEM_MB}m"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     offsets = {
@@ -169,6 +175,16 @@ def replicate(mult: int) -> str:
             c = base
             for col, step in offs:
                 c = c.withColumn(col, F.col(col) + F.lit(i * step))
+            if name == "customer":
+                # Offsetting c_custkey alone would leave c_name
+                # byte-identical across copies, so q146's fuzzy match
+                # would rerun the SAME names at every scale.  The
+                # fixture's c_name is this format of c_custkey, so the
+                # 1x copy is unchanged and the distinct-name domain
+                # scales with the keys.
+                c = c.withColumn(
+                    "c_name", F.format_string("Customer#%09d", "c_custkey")
+                )
             if name == "documents" and i > 0:
                 # Make copies textually DISJOINT via a per-copy alphabet
                 # rotation (Caesar shift by i): verbatim replication gives
@@ -179,12 +195,8 @@ def replicate(mult: int) -> str:
                 # A bijective per-copy char map preserves each copy's
                 # internal pair structure EXACTLY — at BOTH token and
                 # character granularity, and without changing lengths —
-                # while zeroing cross-copy similarity at both levels.
-                # (The earlier token-suffix approach left character
-                # k-grams inside long words identical across copies:
-                # their doc-frequency then grew 16x, tripping q124's
-                # heavy-hitter suppression and deflating its legitimate
-                # pair structure — finding 6 below.)
+                # while zeroing cross-copy similarity at both levels
+                # (docs/SCALING.md findings 2 and 6).
                 # Pure rotation admits at most 26 pairwise-distinct
                 # letter maps: at i % 26 == 0 the map is the identity
                 # and verbatim duplicates (the 109x artifact) silently
@@ -223,349 +235,67 @@ def replicate(mult: int) -> str:
     return out
 
 
-def _fuzzy_probe_frame(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.fuzzy import (  # noqa: E501
-        fuzzy_pairs,
-    )
-
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
-        F.format_string("Customer#%09d", "c_custkey").alias("c_name")
-    )
-    return fuzzy_pairs(cust, "c_name", tau=1)
-
-
-def _fuzzy_probe_frame_capped(spark, sf_dir):
-    # the max_bucket knob engaged (cap 16): candidate volume on the
-    # digit-dense name domain is hard-bounded per variant key — the
-    # before/after pair for SCALING finding 13's q146 row
-    from pyspark.sql import functions as F
-
-    from live_market_data_orderflow_analysis_big_data_project__spark.operators.fuzzy import (  # noqa: E501
-        fuzzy_pairs,
-    )
-
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
-        F.format_string("Customer#%09d", "c_custkey").alias("c_name")
-    )
-    return fuzzy_pairs(cust, "c_name", tau=1, max_bucket=16)
-
-
-def _custom_probes():
-    """Probe-only measurements that are not queries() entries.
-
-    Each value is ``(setup, timed)``: ``setup(spark, sf_dir)`` runs
-    UNTIMED and returns a context object; ``timed(spark, sf_dir, ctx)``
-    is the measured part and returns a DataFrame to noop-write, or None
-    if it executes eagerly itself.
-    """
-    from live_market_data_orderflow_analysis_big_data_project__spark.queries.eblock import (  # noqa: E501
-        q132_join_tables,
-        q132_write_tables,
-    )
-
-    from live_market_data_orderflow_analysis_big_data_project__spark.queries import (  # noqa: E501
-        ablock,
-    )
-
-    return {
-        # probe KEYS keep their original "_staged_" names so the
-        # finding-13+ numbers in docs/SCALING.md stay comparable; the
-        # entries themselves live in queries/ablock.py
-        "q142_staged_hist_report": (
-            None,
-            lambda spark, sf, ctx: ablock.q142_hist_rollup_report(spark, sf),
-        ),
-        "q143_staged_topk": (
-            None,
-            lambda spark, sf, ctx: ablock.q143_topk_certified(spark, sf),
-        ),
-        "q145_staged_kmv": (
-            None,
-            lambda spark, sf, ctx: ablock.q145_kmv_setops(spark, sf),
-        ),
-        # replication leaves c_name byte-identical across copies (only
-        # c_custkey is offset), so probing the staged entry as-is would
-        # rerun the SAME 15k distinct names at 16x.  Re-derive the name
-        # from the offset key (identical to c_name at 1x by fixture
-        # construction) so the distinct-string domain scales honestly.
-        "q146_staged_fuzzy": (
-            None,
-            lambda spark, sf, ctx: _fuzzy_probe_frame(spark, sf),
-        ),
-        "q146_fuzzy_capped": (
-            None,
-            lambda spark, sf, ctx: _fuzzy_probe_frame_capped(spark, sf),
-        ),
-        "q170_staged_triangles": (
-            None,
-            lambda spark, sf, ctx: ablock.q170_triangle_counts(spark, sf),
-        ),
-        "q171_staged_pagerank": (
-            None,
-            lambda spark, sf, ctx: ablock.q171_pagerank(spark, sf),
-        ),
-        "q172_staged_funnel_within": (
-            None,
-            lambda spark, sf, ctx: ablock.q172_funnel_within(spark, sf),
-        ),
-        "q173_staged_boolean_search": (
-            None,
-            lambda spark, sf, ctx: ablock.q173_boolean_search(spark, sf),
-        ),
-        "q174_staged_setsim": (
-            None,
-            lambda spark, sf, ctx: ablock.q174_setsim_join(spark, sf),
-        ),
-        "q175_staged_kcore": (
-            None,
-            lambda spark, sf, ctx: ablock.q175_kcore(spark, sf),
-        ),
-        "q176_staged_collocations": (
-            None,
-            lambda spark, sf, ctx: ablock.q176_collocations(spark, sf),
-        ),
-        "q177_staged_overlapjoin": (
-            None,
-            lambda spark, sf, ctx: ablock.q177_interval_overlap(spark, sf),
-        ),
-        "q178_staged_skew_report": (
-            None,
-            lambda spark, sf, ctx: ablock.q178_skew_report(spark, sf),
-        ),
-        "q179_staged_groupedagg": (
-            None,
-            lambda spark, sf, ctx: ablock.q179_grouped_agg_pandas(spark, sf),
-        ),
-        "q180_staged_quantile": (
-            None,
-            lambda spark, sf, ctx: ablock.q180_quantile_rollup(spark, sf),
-        ),
-        "q181_staged_wsample": (
-            None,
-            lambda spark, sf, ctx: ablock.q181_weighted_sample(spark, sf),
-        ),
-        "q182_staged_proximity": (
-            None,
-            lambda spark, sf, ctx: ablock.q182_proximity_search(spark, sf),
-        ),
-        "q183_staged_kmeans": (
-            None,
-            lambda spark, sf, ctx: ablock.q183_kmeans(spark, sf),
-        ),
-        "q184_staged_attribution": (
-            None,
-            lambda spark, sf, ctx: ablock.q184_attribution(spark, sf),
-        ),
-        "q185_staged_bigramlm": (
-            None,
-            lambda spark, sf, ctx: ablock.q185_bigram_nll(spark, sf),
-        ),
-        "q186_staged_trend": (
-            None,
-            lambda spark, sf, ctx: ablock.q186_group_trend(spark, sf),
-        ),
-        "q187_staged_autocorr": (
-            None,
-            lambda spark, sf, ctx: ablock.q187_autocorr(spark, sf),
-        ),
-        "q188_staged_clustersplit": (
-            None,
-            lambda spark, sf, ctx: ablock.q188_cluster_split(spark, sf),
-        ),
-        "q189_staged_vwapvol": (
-            None,
-            lambda spark, sf, ctx: ablock.q189_vwap_vol(spark, sf),
-        ),
-        "q190_staged_bpe": (
-            None,
-            lambda spark, sf, ctx: ablock.q190_bpe_merges(spark, sf),
-        ),
-        "q191_staged_pq": (
-            None,
-            lambda spark, sf, ctx: ablock.q191_pq_topk(spark, sf),
-        ),
-        "q192_staged_seasonal": (
-            None,
-            lambda spark, sf, ctx: ablock.q192_seasonal_outliers(spark, sf),
-        ),
-        "q193_staged_ivfpq": (
-            None,
-            lambda spark, sf, ctx: ablock.q193_ivfpq_topk(spark, sf),
-        ),
-        "q194_staged_bpebatch": (
-            None,
-            lambda spark, sf, ctx: ablock.q194_bpe_batched(spark, sf),
-        ),
-        "q195_staged_bitlsh": (
-            None,
-            lambda spark, sf, ctx: ablock.q195_bitlsh_topk(spark, sf),
-        ),
-        "q196_staged_entropy": (
-            None,
-            lambda spark, sf, ctx: ablock.q196_char_entropy(spark, sf),
-        ),
-        "q147_staged_pps": (
-            None,
-            lambda spark, sf, ctx: ablock.q147_pps_sample(spark, sf),
-        ),
-        "q148_staged_phrase": (
-            None,
-            lambda spark, sf, ctx: ablock.q148_phrase_search(spark, sf),
-        ),
-        "q149_staged_incsimhash": (
-            None,
-            lambda spark, sf, ctx: ablock.q149_incremental_simhash(spark, sf),
-        ),
-        "q150_staged_gapfill": (
-            None,
-            lambda spark, sf, ctx: ablock.q150_gapfill_locf(spark, sf),
-        ),
-        "q151_staged_retention": (
-            None,
-            lambda spark, sf, ctx: ablock.q151_retention_cohorts(spark, sf),
-        ),
-        "q152_staged_mad": (
-            None,
-            lambda spark, sf, ctx: ablock.q152_mad_outliers(spark, sf),
-        ),
-        "q153_staged_streaks": (
-            None,
-            lambda spark, sf, ctx: ablock.q153_activity_streaks(spark, sf),
-        ),
-        "q154_staged_corr": (
-            None,
-            lambda spark, sf, ctx: ablock.q154_pairwise_corr(spark, sf),
-        ),
-        "q155_staged_rangejoin": (
-            None,
-            lambda spark, sf, ctx: ablock.q155_range_join_concurrency(
-                spark, sf
-            ),
-        ),
-        "q156_staged_twap": (
-            None,
-            lambda spark, sf, ctx: ablock.q156_twap_daily(spark, sf),
-        ),
-        "q157_staged_profile": (
-            None,
-            lambda spark, sf, ctx: ablock.q157_profile_audit(spark, sf),
-        ),
-        "q158_staged_transitions": (
-            None,
-            lambda spark, sf, ctx: ablock.q158_event_transitions(spark, sf),
-        ),
-        "q159_staged_basket": (
-            None,
-            lambda spark, sf, ctx: ablock.q159_basket_lift(spark, sf),
-        ),
-        "q160_staged_sweepline": (
-            None,
-            lambda spark, sf, ctx: ablock.q160_peak_concurrency(spark, sf),
-        ),
-        "q161_staged_wquantiles": (
-            None,
-            lambda spark, sf, ctx: ablock.q161_weighted_quantiles(spark, sf),
-        ),
-        "q162_staged_integrity": (
-            None,
-            lambda spark, sf, ctx: ablock.q162_fk_orphan_audit(spark, sf),
-        ),
-        "q163_staged_skyline": (
-            None,
-            lambda spark, sf, ctx: ablock.q163_price_qty_skyline(spark, sf),
-        ),
-        "q164_staged_balance": (
-            None,
-            lambda spark, sf, ctx: ablock.q164_clamped_balance(spark, sf),
-        ),
-        "q165_staged_concentration": (
-            None,
-            lambda spark, sf, ctx: ablock.q165_flow_concentration(spark, sf),
-        ),
-        "q166_staged_cusum": (
-            None,
-            lambda spark, sf, ctx: ablock.q166_cusum_drift(spark, sf),
-        ),
-        "q167_staged_psi": (
-            None,
-            lambda spark, sf, ctx: ablock.q167_psi_drift(spark, sf),
-        ),
-        "q168_staged_rolling": (
-            None,
-            lambda spark, sf, ctx: ablock.q168_rolling_active(spark, sf),
-        ),
-        "q169_staged_coalesce": (
-            None,
-            lambda spark, sf, ctx: ablock.q169_coalesced_activity(spark, sf),
-        ),
-        # the one-time amortized shuffle: writes execute eagerly inside
-        "q132_write_only": (
-            None,
-            lambda spark, sf, ctx: (q132_write_tables(spark, sf), None)[1],
-        ),
-        # the per-query cost: tables pre-written untimed, then the
-        # exchange-free SMJ read path alone is timed
-        "q132_join_only": (
-            q132_write_tables,
-            lambda spark, sf, ctx: q132_join_tables(spark, *ctx),
-        ),
-    }
-
-
-def measure_one(key: str, sf_dir: str) -> None:
-    """Subprocess entry: time one query in a fresh session."""
-    import __spark_entry__ as ent
-
-    from live_market_data_orderflow_analysis_big_data_project__spark import (
-        get_spark,
-    )
-    from live_market_data_orderflow_analysis_big_data_project__spark.sources.tables import (
-        TABLES,
-        load_table,
-    )
-
-    spark = get_spark(
-        "scale-probe", extra_conf={"spark.driver.memory": DRIVER_MEM}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()  # warm metadata + codegen
-    custom = _custom_probes()
-    if key in custom:
-        setup, timed = custom[key]
-        ctx = setup(spark, sf_dir) if setup else None
-        t0 = time.time()
-        df = timed(spark, sf_dir, ctx)
-        if df is not None:
-            df.write.format("noop").mode("overwrite").save()
-    else:
-        t0 = time.time()
-        ent.queries()[key](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    print(f"ONE {time.time() - t0:.3f}")
-    spark.stop()
-
-
 def run_isolated(key: str, sf_dir: str) -> float:
+    """Bench's median seconds for entry ``key`` on ``sf_dir``, measured
+    by ``python bench.py KEY`` in a fresh process."""
     p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--one", key, sf_dir],
+        [sys.executable, os.path.join(ROOT, "bench.py"), key],
+        env={
+            **os.environ,
+            "SPARK_GRAFT_SF_DIR": sf_dir,
+            "SPARK_GRAFT_DRIVER_MEM_MB": DRIVER_MEM_MB,
+        },
         capture_output=True,
         text=True,
-        timeout=1800,
+        timeout=3600,
     )
+    rec = {}
     for line in p.stdout.splitlines():
-        if line.startswith("ONE "):
-            return float(line.split()[1])
-    raise RuntimeError(f"{key} @ {sf_dir} failed:\n{p.stderr[-2000:]}")
+        if line.startswith("{"):
+            rec = json.loads(line)
+    sec = rec.get("queries", {}).get(key, -1.0)
+    if p.returncode or rec.get("n_failed", 1) or sec < 0:
+        raise RuntimeError(
+            f"{key} @ {sf_dir} failed (exit {p.returncode}):\n{p.stderr[-2000:]}"
+        )
+    return sec
+
+
+def render(doc: str, mult: int, master: str, rows) -> str:
+    """``doc`` with its head (title, intro, table) rebuilt from ``rows``
+    of ``(key, why, sec_1x, sec_mult, ratio)``; every line after the
+    table is kept byte for byte."""
+    lines = doc.splitlines(keepends=True)
+    i = next(n for n, line in enumerate(lines) if line.startswith("| query |"))
+    while i < len(lines) and lines[i].startswith("|"):
+        i += 1
+    head = [
+        f"# Scale probe ({mult}x replicated sf0.1 fixtures, {master})",
+        "",
+        "Key spaces are scaled with the data (ids offset per copy), so a",
+        "keyed shuffle-bounded plan should show wall-time ratio <= ~the",
+        f"replication factor ({mult}); super-linear ratios flag plans that",
+        "would not survive a 100 TB scale-up.  Ratios well under the factor",
+        "mean the 1x run is overhead-dominated (session/scan fixed costs),",
+        "common for sub-second queries.  Each cell is `python bench.py KEY`",
+        "in its own process (fresh JVM) to keep timings independent: the",
+        "entry's median of 3 samples.",
+        "",
+        f"| query | representative of | 1x sec | {mult}x sec | ratio |",
+        "|---|---|---|---|---|",
+    ]
+    head += [
+        f"| {key} | {why} | {t1:.2f} | {tm:.2f} | {ratio:.1f} |"
+        for key, why, t1, tm, ratio in rows
+    ]
+    return "\n".join(head) + "\n" + "".join(lines[i:])
 
 
 def main() -> None:
-    if len(sys.argv) > 2 and sys.argv[1] == "--one":
-        measure_one(sys.argv[2], sys.argv[3])
-        return
+    from live_market_data_orderflow_analysis_big_data_project__spark.session import (
+        default_master,
+    )
+
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 16
     big = replicate(mult)
 
@@ -577,523 +307,10 @@ def main() -> None:
         rows.append((key, why, t1, tm, ratio))
         print(f"{key}: 1x={t1:.2f}s {mult}x={tm:.2f}s ratio={ratio:.1f}")
 
-    lines = [
-        f"# Scale probe ({mult}x replicated sf0.1 fixtures, local[32])",
-        "",
-        "Key spaces are scaled with the data (ids offset per copy), so a",
-        "keyed shuffle-bounded plan should show wall-time ratio <= ~the",
-        f"replication factor ({mult}); super-linear ratios flag plans that",
-        "would not survive a 100 TB scale-up.  Ratios well under the factor",
-        "mean the 1x run is overhead-dominated (session/scan fixed costs),",
-        "common for sub-second queries.  Each cell is measured in its own",
-        "process (fresh JVM) to keep timings independent.",
-        "",
-        f"| query | representative of | 1x sec | {mult}x sec | ratio |",
-        "|---|---|---|---|---|",
-    ]
-    for key, why, t1, tm, ratio in rows:
-        lines.append(f"| {key} | {why} | {t1:.2f} | {tm:.2f} | {ratio:.1f} |")
-    lines += [
-        "",
-        "Findings encoded back into the engine:",
-        "",
-        "1. Before explicit `hint(\"merge\")` on the q20/q26 fact joins,",
-        "   Catalyst's column-pruned size estimates broadcast the fact tables",
-        "   at 16x (q26 ratio 46.9 — the plan that OOMs a driver at 100 TB);",
-        "   with the hints the chain scales ~linearly.",
-        "2. The replica must scale the CORPUS, not copy it: verbatim text",
-        "   replication gives every document 16 exact twins, so near-dup",
-        "   classes grow with scale and pairwise-dedup output is quadratic by",
-        "   construction (first run showed q91b \"ratio\" 109x measuring that",
-        "   artifact).  Copies are made textually disjoint with a PER-COPY",
-        "   ALPHABET ROTATION (bijective char map): each copy's internal",
-        "   pair structure is preserved exactly at both token and character",
-        "   granularity, lengths unchanged, while cross-copy similarity is",
-        "   zero at both levels.  (Rounds 3-5 used a per-copy token suffix,",
-        "   which left char k-grams inside long words identical across",
-        "   copies — their doc-frequency grew 16x and tripped q124's",
-        "   heavy-hitter suppression; see finding 6.  Round 3 replaced the",
-        "   MLlib MinHashLSH formulation with pure-expression banding +",
-        "   exact candidate verification: 64.4s -> 5.0s at 1x, 235s -> 23s",
-        "   at 16x.)",
-        "3. The Arrow/mapInPandas surface scales flat at this fixture size:",
-        "   q100 (binary-payload features), q104 (rolling fingerprint), q105",
-        "   (frame sampling) land at ratio ~1.0-1.3 at 16x data — 80k docs",
-        "   through a per-batch Python pipe is session-overhead-dominated,",
-        "   i.e. the Arrow crossing itself is not the bottleneck term;",
-        "   per-row Python (the banned pattern) would already be",
-        "   super-linear here.",
-        "",
-        "4. The layout gates scale as designed, and the q132 probe is now",
-        "   SPLIT into its two halves: q132_write_only times the one-time",
-        "   amortized bucketing shuffle, q132_join_only times the",
-        "   exchange-free co-located SMJ read path alone (the per-query",
-        "   cost a user actually pays after the layout investment).  The",
-        "   split immediately measured a real knob: a bucketed scan plans",
-        "   ONE task per bucket, so bucket count is a hard read-parallelism",
-        "   cap — the original 8-bucket layout's join-only ratio was 3.7",
-        "   (8 tasks, 24 cores idle at 16x); re-bucketed to 32 (core",
-        "   width) it is ~2.8 (stable across runs), the residual being single-host SMJ sort",
-        "   effects (multi-file buckets defeat the sortBy order guarantee,",
-        "   so the merge join re-sorts).  TUNING.md's re-bucket-when-",
-        "   grown-10x rule, with its number attached.",
-        "",
-        "5. AQE sizes exchanges by shuffle BYTES, which is the wrong cost",
-        "   model for Arrow grouped-map stages: q82's 100k-row frame",
-        "   coalesced to ONE post-shuffle partition, serializing all ~1000",
-        "   groups through a single Python worker (4.4 s).  An explicit",
-        "   `repartition(defaultParallelism, key)` before the groupBy pins",
-        "   worker-per-core parallelism (0.9 s, 5x) — on a real cluster the",
-        "   same line scales the grouped map to executor-core width.  The",
-        "   same trap does NOT affect mapInPandas paths (q100/q104/q105/",
-        "   q124), which inherit scan partitioning, not a shuffle AQE can",
-        "   coalesce.",
-        "",
-        "6. q124's r5 wall ratio (11.3, the table's outlier) DECOMPOSES to",
-        "   linear terms (per-stage cardinalities): at 16x data every",
-        "   distributed cardinality is <= ~17x (n_sel 17.4x; drop-list,",
-        "   kept rows, pair fan-out, output all bounded), i.e. no",
-        "   super-linear term exists — the wall is the mod-p selection map",
-        "   (numpy Horner over every char) which previously ran TWICE",
-        "   (df-count pass + pair pass) and dominates fixed overhead,",
-        "   pushing the wall ratio toward true-linear 16.  Fix: the",
-        "   selection is persisted between its two consumers (a ~n_grams/p",
-        "   materialization vs a second full-corpus rehash); `p` is the",
-        "   sizing knob (selectivity, spill, and shuffle all ~1/p, at the",
-        "   cost of only detecting shared runs >= ~k+p chars).  The same",
-        "   decomposition exposed the token-suffix fixture artifact fixed",
-        "   in finding 2.",
-        "",
-        "7. q91b's wall ratio (4.2 at 16x) DECOMPOSES to all-linear terms",
-        "   (per-stage cardinalities): every stage cardinality lands at",
-        "   15.8-16.1x, max_bucket constant at 22 docs — the wall ratio",
-        "   sits under the factor only because the 1x run is",
-        "   fixed-overhead-dominated.  Growth knob: band_rows (wider bands",
-        "   -> fewer candidates -> fewer verify_rows, recall compensated",
-        "   by n_hashes).",
-        "",
-        "8. Round-7 additions probed at 16x: q138_pack_sequences ratio",
-        "   1.1 (per-shard window + bounded sequence explode, linear),",
-        "   q139_dup_bigram_stats 1.2 (bigram explode + two keyed aggs),",
-        "   q140_zorder_layout 1.3 (two layout writes bound the cost;",
-        "   assignment is pure per-row integer expressions),",
-        "   q76_scd2_merge 1.3 (single-join explode formulation; bucketing",
-        "   the dim at deployment leaves only the update batch shuffling),",
-        "   q77_funnel_cascade 1.4 (one shuffle, per-user fold).",
-        "",
-        "9. Single bench samples are noise at this host: round 4's q120",
-        "   \"regression\" (1.5 s -> 5.4 s, no code change) was the driver-",
-        "   window reorder making q120 the FIRST suite query, which absorbs",
-        "   ~4 s of residual session cold-start (measured 5.7/2.2/1.9/1.7 s",
-        "   over 4 repeats).  bench.py records median-of-3 per batch query",
-        "   since round 5 (BENCH_full.json `query_samples`).",
-        "",
-        "10. q111's r7 BENCH regression (1.80 -> 2.57 s at sf0.1, 16x ratio",
-        "    still 1.0) decomposed per-stage (per-stage cardinalities): the",
-        "    CC loop was ~1.2 s of the wall — 2 rounds x (label-update",
-        "    checkpoint ~0.4 s + a SECOND old-vs-new join ~0.2 s for the",
-        "    convergence count).  Round 8 fused the change flag into the",
-        "    label-update projection (counted off the already-checkpointed",
-        "    frame): one join and one action per round, measured wall back to",
-        "    ~1.9-2.0 s median.  The remaining term is the shared edge-finder",
-        "    pipeline (md5 star join + q91's jaccard verify), not the loop.",
-        "",
-        "11. q121_semdedup's 16x ratio (2.4) is the SemDeDup cap TRANSITION,",
-        "    not a defect (per-stage cardinalities): in-stripe pairs =",
-        "    n_vecs x min(|cluster|, max_cluster)/2.  At 1x the fixture's",
-        "    largest cluster is 218 — UNDER the 512 cap, ~100 comparisons/vec",
-        "    — while at 16x the cap binds (~250/vec ceiling): pairs grow 40x",
-        "    for 16x data (199,666 -> 7,994,240) and the wall tracks pairs",
-        "    linearly (fit ~0.7 us/pair + ~2.9 s fixed; probe wall ratio 2.69",
-        "    with a full-output action).  Past cap saturation growth is",
-        "    data-linear; the knob is `max_cluster` (halving it halves the",
-        "    pair term at the cost of cross-stripe misses) or scaling the",
-        "    upstream quantizer's k so |cluster| stays O(1).",
-        "",
-        "12. Round-8 additions probed at 16x: q76b_scd2_snapshot_sync 1.3",
-        "    (the MERGE delete path costs the same one-join plan as q76),",
-        "    q77b_funnel_cascade_joins 1.3 (cascade joins match the fold",
-        "    twin's 1.2-1.3), q140b_zorder_rank_tiles 1.3 (domain-sized",
-        "    tile maps + the same two layout writes as q140's 1.9 but",
-        "    rank tiles balance the file sizes, trimming the write tail),",
-        "    q141_hll_sketch_rollup 1.4 (map-side sketch partials: the",
-        "    shuffle carries ~kB sketches per (group, bucket, task), so",
-        "    wall tracks the scan; at 16x users the lgk=14 gate fixture",
-        "    crosses into the dense regime — the probe times it, the",
-        "    equality flags are only asserted at gate scale; the regime",
-        "    detector (folded INTO hll_rollup_report in r10, the round",
-        "    q141 re-entered the window) NAMES each group's regime",
-        "    against the ~2^lgk/10 bound and switches dense groups to",
-        "    the 10%-tolerance audit, so a growing corpus stops",
-        "    false-flagging — regime switch pinned in",
-        "    tests/test_sketches.py), and",
-        "    q106b_decontaminate_bloom 1.7 vs exact q106's 1.4 from the",
-        "    same fixture: at THIS scale the exact broadcast is cheap and",
-        "    the bloom pass is pure overhead (build over eval shingles +",
-        "    k=5 extra hashes per corpus shingle + the confirm join's",
-        "    second explode consumer) — the bloom path's win condition is",
-        "    an eval/index key set past the broadcast threshold, which no",
-        "    fixture reaches; what the probe DOES establish is that the",
-        "    overhead itself is linear, not a second scaling term.",
-        "",
-        "13. The r8-staged rollup cohort (promoted to queries/ablock.py",
-        "    in the r9 rotation; probe keys keep their _staged_ names",
-        "    for cross-round comparability) was probed BEFORE entering",
-        "    the window: q142_staged_hist_report",
-        "    5.3 -> 7.1 s (1.4x) and q143_staged_topk 5.8 -> 8.8 s (1.5x)",
-        "    at 16x — both are one map-side-combinable count shuffle whose",
-        "    post-agg cardinality is domain- not row-bounded (bins x",
-        "    buckets; items x buckets), so the wall tracks the scan.  The",
-        "    audit frames (exact count / discrete quantile / certificate)",
-        "    join on |groups| rows and are invisible at any scale.",
-        "    q145_staged_kmv 5.4 -> 8.0 s (1.5x): one distinct-hash",
-        "    shuffle + bottom-k windows; at 16x users (24k) the k=4096",
-        "    sketches SATURATE, so the probe times the estimation regime",
-        "    the exact-regime gate can't reach — the pair joins stay on",
-        "    the 5-row sketch frame at every scale.",
-        "    q146_staged_fuzzy 8.2 -> 91.6 s at 16x keys (names",
-        "    re-derived from the offset custkey so the distinct-string",
-        "    domain scales; overlapping per-copy offsets make the id",
-        "    space DENSER, so true ed<=1 pairs grow faster than names —",
-        "    the wall tracks the candidate/verify volume, the honest",
-        "    cost driver, with no quadratic blocking term: the largest",
-        "    variant bucket stays neighbor-bounded at every scale).",
-        "    TERM DECOMPOSITION (r9): 15k -> 165k names (11x), candidate",
-        "    pairs 0.98M -> 16.95M (17.3x), TRUE pairs 3.65M at 16x, max",
-        "    bucket 38 -> 47 (~constant) — the growth is REAL matched-",
-        "    pair volume from a denser id space, not a hot-key term; no",
-        "    blocking scheme returns 3.65M pairs for less than the pair",
-        "    volume.  The r9 max_bucket knob is the circuit-breaker for",
-        "    the failure mode this fixture does NOT have (placeholder/",
-        "    empty-string hot keys in dirty data): q146_fuzzy_capped",
-        "    (cap 16, BINDING — every bucket here is 10-47) bounds the",
-        "    16x wall 91.6 -> 19.0 s (4.8x) but keeps only 2.9% of the",
-        "    pairs on this uniformly-dense domain, where every true",
-        "    neighbor's shared keys are all hot; at cap 64 (non-binding)",
-        "    it is a measured no-op (97.3 s, anti-join overhead only).",
-        "    Set the cap ABOVE the honest neighbor bound and it costs",
-        "    nothing until a hot key appears; engage it below bucket",
-        "    sizes only as load-shedding with the recall bill stated.",
-        "    q147_staged_pps 3.0 -> 4.0 s (1.3x): one per-stratum",
-        "    window over one scan — the q108/q125 partitioned-window",
-        "    shape; ticket math is per-row integer expressions, so the",
-        "    wall is the stratum-sort term, linear in stratum size.",
-        "    q148_staged_phrase 4.4 -> 5.1 s (1.1x): the index BUILD",
-        "    (posexplode + (term,doc) groupBy) is the scaling term and",
-        "    tracks the scan; the phrase-match joins touch only the two",
-        "    queried terms' postings (and the alphabet-rotated replica",
-        "    copies match the literal phrase only in copy 0, so the",
-        "    match side is constant by fixture construction — at real",
-        "    scale it grows with the queried terms' df, not the corpus).",
-        "    q149_staged_incsimhash 9.0 -> 9.2 s (1.0x — constant input",
-        "    slice BY DESIGN, the q91d bound): what the probe pins is",
-        "    that only the shard is fingerprinted and the band join",
-        "    never pairs old x old; the scaling axis at deployment is",
-        "    shard size, with the index persisted bucketed by",
-        "    (band, bkey).",
-        "    q150_staged_gapfill 3.6 -> 5.1 s (1.4x): the one data",
-        "    shuffle to (key, bucket) tracks the scan; the dense grid",
-        "    and its LOCF/interp windows are sized by keys x span",
-        "    (constant here — same 30-day span, same 5 types), so the",
-        "    fill stage is scale-invariant by construction.",
-        "    q151_staged_retention 3.8 -> 5.3 s (1.4x): the (user, day)",
-        "    distinct is the scaling term; 16x offset users grow the",
-        "    key space linearly and the cohort/age agg output stays",
-        "    domain-bounded (cohorts x ages <= 30 x 30).",
-        "    q152_staged_mad 6.7 -> 9.6 s (1.4x): two per-group",
-        "    selection windows (median, then MAD) dominate — the",
-        "    per-group sort is the exactness cost and scales",
-        "    n log n in group size; medians broadcast back as",
-        "    |groups|-row joins, invisible.",
-        "    q153_staged_streaks 3.2 -> 5.2 s (1.6x): distinct +",
-        "    row_number + two groupBys, all keyed by user — the",
-        "    gaps-and-islands difference trick never materializes a",
-        "    per-user sequence wider than its active-day count.",
-        "    q154_staged_corr 3.4 -> 4.5 s (1.3x): the (type, hour)",
-        "    cents groupBy is the only data-sized exchange; the pair",
-        "    self-join and moment agg run on the domain-bounded hourly",
-        "    frame (types x hours), invariant at any corpus scale.",
-        "    LINEAGE-CUT NOTE (applies to the whole staged batch): the",
-        "    multi-consumer frames in q154/q158/q159/q160/q167/q168 are",
-        "    localCheckpointed (scans 8->1 on q159, 1x wall 5.1->3.6),",
-        "    but the SAME cut inside range_count_binned REGRESSED q155",
-        "    28.4 -> 43.8 s at 16x — a checkpoint leaf hides size stats",
-        "    from AQE's bin-join planning while ReusedExchange already",
-        "    deduped the upstream agg.  Cut only where measured;",
-        "    reverted there (rangejoin.py carries the note).",
-        "    q155_staged_rangejoin 5.5 -> 28.4 s (5.1x): the",
-        "    pair-materializing rewrite measured 103.6 s (16.1x) on the",
-        "    same fixture — matched-pair volume is intervals x density,",
-        "    quadratic under a uniform scale-up — so the shipped plan",
-        "    pre-aggregates interior bins (intervals x span/bin rows)",
-        "    and row-checks only the two boundary bins; the residual",
-        "    super-linearity is exactly that boundary term (intervals x",
-        "    2 x bin-density), tunable via bin_seconds, and 3.6x faster",
-        "    absolute at 16x.  Both plans are hash-equal to the naive",
-        "    non-equi oracle.",
-        "    q156_staged_twap 4.7 -> 7.3 s (1.6x): the lead() window",
-        "    and the weighted agg share one (type, day) exchange; the",
-        "    per-partition sort is a day's ticks per key, the natural",
-        "    bound, and the output stays domain-sized (types x days).",
-        "    q157_staged_profile 7.6 -> 28.0 s (3.7x): the k exact",
-        "    count_distinct's ride one Expand (k x row traffic into",
-        "    hash partials) — the probe-driven plan fix here was",
-        "    SPLITTING the audit into a distinct pass and a keyless",
-        "    min/max/sum fold: fused, the string min/max buffers demote",
-        "    the whole Expand to a SortAggregate keyed by all k distinct",
-        "    expressions (27.1 -> 134.9 s, 4.8x slower at 16x).  The",
-        "    exact_distinct=False flag swaps in HLL partials for corpus",
-        "    scale (3.6 s at sf0.1).",
-        "    q158_staged_transitions 3.9 -> 5.5 s (1.4x, post-lineage-cut): one (user)",
-        "    shuffle for the lag window; the count agg output is",
-        "    |states|^2 = 25 rows at any scale and the per-source",
-        "    totals derive from those counts, not a second data pass.",
-        "    q159_staged_basket 3.6 -> 7.0 s (1.9x): (basket, item)",
-        "    distinct + basket-keyed self-join whose fan-out is bounded",
-        "    by items-per-basket^2 (<= |domain|^2 = 25) — never",
-        "    corpus^2; item supports and the basket count broadcast.",
-        "    The membership frame feeds four consumers, so it is",
-        "    localCheckpointed (q111/s15 idiom): 8 parquet scans -> 1,",
-        "    1x wall 5.1 -> 3.6 s.",
-        "    q160_staged_sweepline 3.6 -> 6.2 s (1.7x, post-lineage-cut): endpoints",
-        "    union (2 rows/interval) + one per-day window sort — the",
-        "    n log n sweep term, linear in endpoints where the overlap",
-        "    self-join would be quadratic in concurrency.",
-        "    q161_staged_wquantiles 8.8 -> 12.8 s (1.5x): broadcast",
-        "    part dim into the lineitem scan + ONE per-brand (cents,",
-        "    id) window sort — the exact-selection cost, same shape as",
-        "    q152; the quantile picks are conditional aggregates on",
-        "    the already-sorted pass, no second window.",
-        "    q162_staged_integrity 4.4 -> 7.9 s (1.8x): four key-only",
-        "    LEFT joins, columns pruned at the scan and parents",
-        "    key-deduped before joining; the count aggregates collapse",
-        "    map-side, so output stays one row per FK at any scale.",
-        "    q163_staged_skyline 5.6 -> 14.2 s (2.5x): the brand count",
-        "    is FIXED (25), so 16x data multiplies per-partition sort",
-        "    width 16x — the n log n selection term, same class as",
-        "    q152/q161; finer keys restore parallelism at deployment.",
-        "    The rewrite's headline is vs the alternative: the naive",
-        "    dominance join needs 504 s at 1x (DuckDB IEJoin) and",
-        "    grows quadratically.",
-        "    q164_staged_balance 4.0 -> 6.4 s (1.6x): the",
-        "    non-associative clamp fold as one per-user window pass",
-        "    (reflection identity) — same keyed-sort class as q156;",
-        "    16x users scale the key space, partition width unchanged.",
-        "    q165_staged_concentration 4.2 -> 5.0 s (1.2x): the",
-        "    (type, user) totals shuffle collapses map-side; the rank",
-        "    window runs on the actor frame (users x types), 16x",
-        "    smaller than the data, and output is one row per type.",
-        "    q166_staged_cusum 8.7 -> 14.2 s (1.6x): three window",
-        "    passes (median, MAD, fold) all keyed by type — the fixed",
-        "    5-type key makes per-partition sort width the scaling",
-        "    term, the q152/q163 class; at deployment the monitor keys",
-        "    by (symbol, day) and parallelism returns.",
-        "    q167_staged_psi 5.9 -> 7.8 s (1.3x, post-lineage-cut): one reference rank",
-        "    window builds the decile edges; binning both snapshots is",
-        "    a broadcast-join expression whose counts collapse",
-        "    map-side — output fixed at keys x bins (50 rows).",
-        "    q168_staged_rolling 3.3 -> 5.3 s (1.6x, post-lineage-cut): the (user, day)",
-        "    distinct tracks the data; the factor-7 contribution",
-        "    explode applies to the ACTIVE-PAIR frame (users x days),",
-        "    already 16x smaller than raw, and the second distinct",
-        "    collapses map-side — no per-day trailing rescans.",
-        "    q173_staged_boolean_search 5.1 -> 9.1 s (1.8x): the index",
-        "    BUILD (posexplode + (term, doc) groupBy) is the scaling",
-        "    term, as in q148; the query itself touches three terms'",
-        "    postings + one broadcast anti-join — with the index",
-        "    persisted bucketed by term, query cost is df-bounded and",
-        "    corpus-independent.  The NOT term binds at every sf",
-        "    (3098 -> 467 docs at sf0.1).",
-        "    q172_staged_funnel_within 3.4 -> 7.4 s (2.2x): q77's",
-        "    one-(user)-shuffle fold with the WITHIN condition carried",
-        "    in the fold state — no extra join or pass vs the",
-        "    unconstrained twin; the ratio is the per-user",
-        "    collect+sort term (16x users, same per-user width), the",
-        "    q77 class.  The 48 h gap BINDS at every fixture sf",
-        "    (stage-sum 2866 vs 4500 unconstrained at sf0.1), so the",
-        "    gate exercises the constraint, not just the fold.",
-        "    NEWLY STAGED IN r9 (the graph family, operators/graph.py):",
-        "    q170_staged_triangles 7.7 -> 9.3 s (1.2x — the post-r10",
-        "    lineage-cut measurement, now also the main-table row: deg",
-        "    and oriented localCheckpointed, executed plan 114 -> 14",
-        "    exchanges; pre-cut it was 9.9 -> 10.7 s): the oriented",
-        "    wedge join's",
-        "    fan-out is bounded by per-node out-degree O(sqrt(2m)), and",
-        "    the fixture's distinct-edge set grows sub-linearly with",
-        "    events (node-pair density saturates), so the wall is scan +",
-        "    edge-build; the naive triple join this replaces is the",
-        "    oracle, hash-equal at 3 sfs.",
-        "    q171_staged_pagerank 9.1 -> 12.7 s (1.4x): 3 bounded",
-        "    shuffle rounds of (dst, integer contribution) pairs — the",
-        "    int64 micro-unit quantization that makes the iterations",
-        "    hash-gateable adds no scaling term; per-iteration",
-        "    localCheckpoint keeps plan depth constant (q111 idiom).",
-        "    q169_staged_coalesce 4.4 -> 5.7 s (1.3x; a first run",
-        "    recorded 16.6 s at 1x and re-measured quiet — the",
-        "    loaded-host caveat below): the (user, day, type) interval",
-        "    build is the data shuffle; the sweep windows run on the",
-        "    domain-bounded interval frame.",
-        "",
-        "14. NEWLY STAGED IN r10 (probed before entering any window):",
-        "    q174_staged_setsim 13.1 -> 108.3 s (8.3x at 16x docs) as",
-        "    staged; r11 added PPJoin's LENGTH FILTER before the verify",
-        "    join (den*Lmin >= num*Lmax, lossless) and carried set sizes",
-        "    through the prefix postings (two post-verify joins deleted):",
-        "    re-probed 11.0 -> 53.8 s (4.9x).",
-        "    TERM DECOMPOSITION (per-stage cardinalities, post-filter):",
-        "    every stage is EXACTLY 16.0x — elements 260k -> 4.17M, prefix",
-        "    rows 81k -> 1.29M, prefix-join pool 202k -> 3.24M, candidates",
-        "    AFTER the length filter 105k -> 1.67M (the filter halves the",
-        "    pool on this corpus), verify row traffic 7.5M -> 119.6M (was",
-        "    13.0M -> 208.7M pre-filter), output pairs 256 -> 4096,",
-        "    cross-copy candidates 0 (asserted; the alphabet-rotated",
-        "    replica keeps copies textually disjoint — the finding-2",
-        "    rule).  The 4.9x wall on 16.0x work is sub-linear per unit;",
-        "    the dominant term remains the verify join's candidates x",
-        "    element-list traffic, output-shaped, not a blocking artifact",
-        "    — no quadratic term anywhere.",
-        "    q175_staged_kcore 7.1 -> 9.7 s (1.4x): six peel rounds =",
-        "    twelve bounded keyed shuffles over a shrinking daily edge",
-        "    frame; the graph is events-derived and day-bounded, so the",
-        "    probe is scan-dominated — the peel itself is O(m) per round",
-        "    at any scale.",
-        "    q176_staged_collocations 5.8 -> 11.0 s (1.9x): one bigram",
-        "    count shuffle is the data term; margin joins are",
-        "    vocabulary-sized and the 1-row total broadcasts.",
-        "    q177_staged_overlapjoin 3.5 -> 6.2 s (1.8x): bin equi-join",
-        "    with first-shared-bin dedup; output is TRUE pair volume",
-        "    (~29M pairs at 16x — 16x the 1x volume, the honest output",
-        "    term), per-bin candidates are spans-in-bin x windows-in-bin",
-        "    with windows domain-bounded (types x 1 per hour).",
-        "    q178_staged_skew_report 4.5 -> 5.7 s (1.3x): one per-key",
-        "    count shuffle per diagnosed keyset is the data term; the p99",
-        "    selection's global window runs over the bucket-SIZE histogram",
-        "    (provably O(sqrt(2 n_rows)) rows — distinct sizes sum to at",
-        "    most n_rows), so nothing downstream of the count agg scales",
-        "    with keys, let alone rows.",
-        "",
-        "15. NEWLY STAGED IN r11 (probed before entering any window):",
-        "    q179_staged_groupedagg 5.4 -> 7.7 s (1.4x): one keyed",
-        "    exchange into ArrowAggregatePython; whole groups cross to",
-        "    Python, so wall scales with rows-through-Arrow — the cell's",
-        "    inherent cost (the q82 lesson), explicitly repartitioned at",
-        "    cluster width so AQE's byte-sized coalescing cannot serialize",
-        "    the groups through one worker.",
-        "    q180_staged_quantile 8.3 -> 10.4 s (1.3x): the one data term",
-        "    is the (group, day, value) histogram count shuffle; the",
-        "    summary is k rows per bucket and every read/audit join is",
-        "    group- or domain-sized, so 16x the rows moves only the first",
-        "    shuffle.",
-        "    q181_staged_wsample 3.5 -> 5.2 s (1.5x): the O(sum w) ticket",
-        "    explode collapses map-side under the algebraic min partials,",
-        "    so the shuffle carries one row per ITEM; the per-stratum",
-        "    top-n window runs on the item frame.",
-        "    q182_staged_proximity 4.2 -> 4.6 s (1.1x): index build is the",
-        "    q94 wordcount-class shuffle; the query itself joins two",
-        "    posting buckets on doc_id with nested HOF position algebra —",
-        "    scan-dominated at any scale, the persisted-index posture",
-        "    makes the per-query cost independent of corpus size.",
-        "",
-        "16. NEWLY STAGED IN r12 (probed before entering any window):",
-        "    q183_staged_kmeans 7.2 -> 7.7 s (1.1x): per iteration = one",
-        "    assignment scan against a BROADCAST of k centroid rows + one",
-        "    (cluster, dim) update shuffle of k*d rows; 16x vectors move",
-        "    only the scan, and the fixture frame is so far inside fixed",
-        "    session cost that the wall barely moves.",
-        "    q184_staged_attribution 4.3 -> 5.1 s (1.2x): one shuffle by",
-        "    user + one ordered RANGE-frame pass; the frame is bounded by",
-        "    the lookback, so no term grows faster than the tape.",
-        "    q185_staged_bigramlm 5.2 -> 10.3 s (2.0x): the bigram-",
-        "    instance frame and its three count aggs are the data terms",
-        "    (all ~16x rows); wall lands at 2x because the 1x run is",
-        "    fixed-cost-dominated — the same sub-linear-by-overhead shape",
-        "    as q109/q139, whose n-gram machinery this extends.",
-        "    q186_staged_trend 6.9 -> 8.4 s (1.2x): one map-side-",
-        "    combinable moment shuffle; everything downstream is",
-        "    |groups|-sized.  THE PROBE EARNED ITS KEEP here: the first",
-        "    guard draft bounded the moment products with one conservative",
-        "    A*B test over the moment groups, and the 16x run raised it on",
-        "    the never-computed sum_y*sxy pairing while every REAL product",
-        "    had ~4 orders of magnitude of headroom — the guard now checks",
-        "    exactly the six products the closed forms compute, so it",
-        "    fires iff a real product would wrap (operators/stats.py).",
-        "",
-        "17. The r14-bound cohort staged mid-r12 (probed before entering",
-        "    any window):",
-        "    q187_staged_autocorr 4.4 -> 5.0 s (1.1x): the only data term",
-        "    is the daily-cents shuffle; grid fill and the lag self-join",
-        "    run on the domain-bounded (type x day) frame, so 16x rows",
-        "    barely move the wall.",
-        "    q188_staged_clustersplit 7.6 -> 8.6 s (1.1x): rides q111's",
-        "    linear star edges + bounded near-dup slice (finding 10), then",
-        "    two keyed lookups on the |docs| frame.",
-        "    q189_staged_vwapvol 3.0 -> 4.6 s (1.5x): one (type, day)",
-        "    shuffle shared by the lag window and the moment agg (the q156",
-        "    TWAP plan shape); the tick tape is the only 16x term.",
-        "    q190_staged_bpe 9.6 -> 12.5 s (1.3x): the corpus pays exactly",
-        "    ONE token-count shuffle; the 3 merge rounds run on the vocab",
-        "    frame (which the alphabet-rotated replica also grows ~16x —",
-        "    disjoint copies have disjoint vocabularies — and the loop",
-        "    still lands at 1.3x, confirming the vocab-not-corpus cost",
-        "    model).  The 1-row argmax collects are TakeOrdered, never a",
-        "    global sort.",
-        "    q191_staged_pq 10.8 -> 13.2 s (1.2x): m=4 per-subspace Lloyd",
-        "    loops are broadcast-assign scans + (cluster, dim) update",
-        "    shuffles (the q183 shape x4); the ADC search joins the",
-        "    m-ints-per-vector CODES frame against an n_queries*m*k-row",
-        "    broadcast table — no full-vector traffic at query time, which",
-        "    is the entire point of PQ.",
-        "    q192_staged_seasonal 4.5 -> 5.6 s (1.3x): one daily-totals",
-        "    shuffle is the only data term; the selection windows and",
-        "    baseline broadcasts run on the domain-bounded (type x day)",
-        "    frame.",
-        "",
-        "18. q193/q194, probed when they were added:",
-        "    q193_staged_ivfpq 13.2 -> 13.7 s (1.0x): the coarse chain plus",
-        "    the four PQ sub-chains are all broadcast-assign scans +",
-        "    (cluster, dim) update shuffles whose per-iteration",
-        "    checkpoint/broadcast mechanics dominate the corpus-linear scan",
-        "    term at these sizes; the search side touches only the codes",
-        "    frame restricted by the n_queries*nprobe probed-list broadcast.",
-        "    q194_staged_bpebatch 8.0 -> 7.7 s (1.0x): the q190 cost model",
-        "    at half the driver round-trips — one corpus token-count",
-        "    shuffle, then vocab-frame rounds (the 16x replica grows the",
-        "    vocab too, and the loop still lands flat: round fixed costs",
-        "    dominate at fixture scale).",
-        "",
-        "Caveats: absolute seconds vary (up to ~3x run-to-run) with external",
-        "host load — the r9 regeneration itself recorded q106 at \"4.2x\" and",
-        "q91b at \"6.0x\" mid-run; both re-measured immediately after at 1.8x",
-        "and 3.6x (their historical bands) and the table carries the",
-        "re-measured cells.  The practice stands: re-run any outlier ratio",
-        "before believing it.  Applied again to the r11 regeneration: the",
-        "q91b/q155/q157 16x cells came back 2-3x their standing records with",
-        "stable 1x cells; each was re-measured 3x (q91b spread 30.6-88.7 s)",
-        "and the MINIMUM recorded — contention noise is strictly additive,",
-        "and q91b's minimum lands the ratio back at finding 7's decomposed",
-        "4.2x.  Applied again to the r12 regeneration: every cell landed at",
-        "or below its standing record except q161's 16x (12.97 s vs the",
-        "8.45 s record), which re-measured twice at 7.12/6.75 s — the table",
-        "carried the minimum (ratio 1.3, its historical band).  The",
-        "stage-cardinality decompositions (findings 7, 11, 13-15)",
-        "are the load-immune signal.  Original caveat:",
-        "host load — a loaded-host probe once recorded q91b at \"19.5x\" that",
-        "re-measured at 4.3x quiet; re-run ratios that look anomalous before",
-        "acting on them.  The per-run RATIO is the stable signal, and only on",
-        "a quiet host.  Measurements are on a single 32-core JVM —",
-        "shuffle-heavy ratios (q20) include single-host sort/spill effects a",
-        "real cluster distributes.",
-        "",
-        "Regenerate: `python tools/scale_probe.py`.",
-        "",
-    ]
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "docs",
-        "SCALING.md",
-    )
-    with open(out, "w") as f:
-        f.write("\n".join(lines))
+    with open(DOC) as f:
+        doc = f.read()
+    with open(DOC, "w") as f:
+        f.write(render(doc, mult, default_master(), rows))
     print("wrote docs/SCALING.md")
 
 
